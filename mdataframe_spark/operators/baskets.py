@@ -11,57 +11,16 @@ engine reproduces the fixpoint trajectory bit-for-bit).
 
 from __future__ import annotations
 
-import logging
+from collections import Counter
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..cache import local_checkpoint_tracked as _local_checkpoint_tracked
 from ..cache import persist_tracked as _persist_tracked
 from .dedup import DEFAULT_DF_CAP, cap_hot_keys
-
-_log = logging.getLogger(__name__)
-
-# Directed-edge count above which the iterative graph operators stop
-# broadcasting their node-bounded side tables (keep sets, label
-# tables): node count <= directed edge count, and ~5M keys of a few
-# dozen bytes is the conventional upper end of a safe broadcast on a
-# multi-GB executor. Above it the per-round joins fall back to shuffle
-# — correct, logged, slower — instead of a broadcast OOM.
-BROADCAST_EDGES_MAX = 5_000_000
-
-
-def _graph_broadcast_gate(
-    directed: DataFrame, limit: int, op: str, n: int | None = None
-) -> bool:
-    """Probe the (persisted) directed edge list ONCE and decide whether
-    the per-round node-bounded tables may be broadcast. The probe is a
-    count on an already-materialized frame — one cheap action, the
-    cap_hot_keys loud-guard discipline applied to the broadcast
-    assumption instead of the join-key assumption. Pass ``n`` when the
-    caller already counted the frame (no second count job).
-
-    ``limit <= 0`` means NEVER broadcast (the natural reading of a
-    zero budget — always take the shuffle-join arm), not 'unlimited'.
-    """
-    if limit <= 0:
-        return False
-    if n is None:
-        n = directed.count()
-    if n > limit:
-        _log.warning(
-            "%s: directed edge list has %d rows > broadcast_edges_max=%d"
-            " — falling back to shuffle joins for the per-round node"
-            " tables (correct but slower; raise the limit only with"
-            " executor memory to spare)",
-            op, n, limit,
-        )
-        return False
-    return True
-
-
-def _bc(df: DataFrame, use_broadcast: bool) -> DataFrame:
-    return F.broadcast(df) if use_broadcast else df
+from .graph import EdgeTable
 
 
 def co_occurrence_pairs(
@@ -224,85 +183,48 @@ def pagerank(
     engine replays all ``iterations`` rounds bit-for-bit (fixed
     iterations, not convergence detection: no driver round-trips at
     all). Undirected edges mean no dangling vertices by construction
-    (every vertex has degree >= 1).
+    (every vertex has degree >= 1); a self-loop counts once in its
+    vertex's degree, and rows with a null endpoint are dropped.
 
-    Plan shape per round: one edge join + one vertex-keyed groupBy over
-    the MODEL-sized pair graph (pairs come from the bounded dedup /
-    basket generators, not the corpus). Returns (v, rank) with rank
-    rounded to 6 dp.
+    Arms (see :mod:`.graph`): a graph of <= ``small_graph_max``
+    undirected edges runs the trajectory on the driver; otherwise each
+    round is one edge join against the (broadcast) rank table + one
+    vertex-keyed sum. Returns (v, rank) with rank rounded to 6 dp.
     """
-    e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    # size-gated driver arm (the connected_components hybrid): pair
-    # graphs are model-sized by construction (bounded candidate
-    # generators), and each distributed round costs fixed scheduler
-    # overhead that dwarfs the driver arithmetic. small_graph_max=0
-    # forces the distributed loop.
-    if small_graph_max and small_graph_max > 0:
-        e = _persist_tracked(e)
-        if e.count() <= small_graph_max:
-            from pyspark.sql import types as T
-
-            ranks_map = _pagerank_driver(
-                [(r["a"], r["b"]) for r in e.collect()],
-                iterations,
-                damping,
-                iter_decimals,
-            )
-            vt = e.schema["a"].dataType
-            schema = T.StructType(
-                [
-                    T.StructField("v", vt),
-                    T.StructField("rank", T.DoubleType()),
-                ]
-            )
-            return e.sparkSession.createDataFrame(
-                sorted((v, round(r, 6)) for v, r in ranks_map.items()),
-                schema,
-            )
-    # EAGER checkpoint, not just persist: the edge frame's lineage
-    # (often a whole candidate-pair pipeline) is re-embedded in every
-    # iteration's logical plan otherwise, and Catalyst analysis — not
-    # data — dominates (the connected_components lesson). One
-    # truncation up front keeps the per-iteration plan a leaf join.
-    edges = _local_checkpoint_tracked(
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
+    g = EdgeTable(pairs, id_a, id_b, "pagerank", small_graph_max, self_loops=True)
+    if g.arrays is not None:
+        x, y = g.arrays
+        ranks_map = _pagerank_driver(
+            zip(x.tolist(), y.tolist()), iterations, damping, iter_decimals
+        )
+        return g.frame(
+            sorted((v, round(r, 6)) for v, r in ranks_map.items()),
+            [("v", g.vtype), ("rank", T.DoubleType())],
+        )
+    deg = g.edges.groupBy(F.col("a").alias("v")).agg(
+        F.count(F.lit(1)).alias("deg")
     )
-    deg = edges.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     n = deg.count()
-    ranks = deg.select(
-        F.col("a").alias("v"),
-        F.round(F.lit(1.0 / n), iter_decimals).alias("rank"),
-        "deg",
-    )
     base = (1.0 - damping) / n
-    for _ in range(iterations):
+
+    def step(s):
+        share = s.select(
+            F.col("v").alias("b"), (F.col("rank") / F.col("deg")).alias("c")
+        )
         contrib = (
-            edges.join(
-                ranks.select(
-                    F.col("v").alias("b"),
-                    (F.col("rank") / F.col("deg")).alias("__c"),
-                ),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.sum("__c").alias("__in"))
+            g.edges.join(g.bc(share), "b")
+            .groupBy(F.col("a").alias("v"))
+            .agg(F.sum("c").alias("in"))
         )
-        # each round materializes eagerly (the connected_components
-        # discipline): a lazy 5-deep join nest re-analyzes and
-        # re-executes the whole prefix at the final action
-        ranks = _local_checkpoint_tracked(
-            ranks.select("v", "deg")
-            .join(contrib.withColumnRenamed("a", "v"), "v")
-            .select(
-                "v",
-                F.round(
-                    F.lit(base) + F.lit(damping) * F.col("__in"),
-                    iter_decimals,
-                ).alias("rank"),
-                "deg",
-            )
+        rank = F.round(F.lit(base) + F.lit(damping) * F.col("in"), iter_decimals)
+        return s.select("v", "deg").join(contrib, "v").select(
+            "v", rank.alias("rank"), "deg"
         )
+
+    init = deg.select(
+        "v", F.round(F.lit(1.0 / n), iter_decimals).alias("rank"), "deg"
+    )
+    ranks = g.loop(init, step, iterations)
     return ranks.select("v", F.round("rank", 6).alias("rank"))
 
 
@@ -514,57 +436,49 @@ def jaccard_link_prediction(
     wedges and its recommendations are meaningless anyway). Union
     size is deg(x)+deg(y)−cn computed from the degree table — never a
     neighbor-set materialization. Exact integer arithmetic end to end;
-    the ratio rounds to 6 dp."""
-    e = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-        )
-        .distinct()
+    the ratio rounds to 6 dp.
+
+    Arms (see :mod:`.graph`): a graph of <= ``small_graph_max``
+    undirected edges whose wedge fan-out Σ C(deg, 2) over non-hub
+    vertices is at most ``driver_wedge_max`` runs on the driver (the
+    fan-out, not the edge count, is this arm's cost: a dense graph under
+    the edge cut could otherwise run for hours); otherwise the
+    distributed wedge plan runs."""
+
+    def wedges_fit(x, y):
+        _, deg = np.unique(np.concatenate([x, y]), return_counts=True)
+        deg = deg[deg <= max_degree]
+        return int((deg * (deg - 1) // 2).sum()) <= driver_wedge_max
+
+    g = EdgeTable(
+        pairs, id_a, id_b, "jaccard_link_prediction", small_graph_max,
+        self_loops=False, driver_fits=wedges_fit, plan="wedge plan",
     )
-    e = _persist_tracked(e)
-    # size-gated driver arm (the pagerank/connected_components hybrid):
-    # the candidate graphs are model-sized by construction and the
-    # distributed path costs ~8 small sequential jobs of fixed
-    # scheduler overhead; small_graph_max=0 forces the distributed
-    # wedge plan (both arms label-identical, equality-tested).
-    if small_graph_max and small_graph_max > 0:
-        if e.count() <= small_graph_max:
-            edge_rows = [(r["a"], r["b"]) for r in e.collect()]
-            # unlike pagerank's LINEAR driver arm, this one's cost is
-            # the wedge fan-out Σ C(deg, 2) — an edge-count gate alone
-            # would admit a dense graph whose wedge loop runs for
-            # hours on the driver. Estimate the fan-out from the
-            # (conservative: original) degrees and fall through to the
-            # distributed wedge plan when it exceeds the budget.
-            from collections import defaultdict
+    if g.arrays is not None:
+        x, y = g.arrays
+        out = g.frame(
+            _jaccard_driver(
+                list(zip(x.tolist(), y.tolist())), max_degree, top_k
+            ),
+            [
+                ("id_x", g.vtype),
+                ("id_y", g.vtype),
+                ("common_neighbors", T.LongType()),
+                ("degree_x", T.LongType()),
+                ("degree_y", T.LongType()),
+                ("jaccard", T.DoubleType()),
+            ],
+        )
+    else:
+        out = _jaccard_wedge_plan(g.und, max_degree)
+    return out.orderBy(
+        F.col("jaccard").desc(), F.col("id_x").asc(), F.col("id_y").asc()
+    ).limit(top_k)
 
-            deg_py = defaultdict(int)
-            for a, b in edge_rows:
-                deg_py[a] += 1
-                deg_py[b] += 1
-            wedge_est = sum(
-                d * (d - 1) // 2
-                for d in deg_py.values()
-                if d <= max_degree
-            )
-            if wedge_est <= driver_wedge_max:
-                from pyspark.sql import types as T
 
-                rows = _jaccard_driver(edge_rows, max_degree, top_k)
-                vt = e.schema["a"].dataType
-                schema = T.StructType(
-                    [
-                        T.StructField("id_x", vt),
-                        T.StructField("id_y", vt),
-                        T.StructField("common_neighbors", T.LongType()),
-                        T.StructField("degree_x", T.LongType()),
-                        T.StructField("degree_y", T.LongType()),
-                        T.StructField("jaccard", T.DoubleType()),
-                    ]
-                )
-                return e.sparkSession.createDataFrame(rows, schema)
+def _jaccard_wedge_plan(e: DataFrame, max_degree: int) -> DataFrame:
+    """Distributed arm of :func:`jaccard_link_prediction` over the
+    undirected edge table ``(a, b)``: every scored candidate pair."""
     deg = _persist_tracked(
         e.select(F.col("a").alias("x"))
         .unionAll(e.select(F.col("b").alias("x")))
@@ -598,7 +512,7 @@ def jaccard_link_prediction(
     union_size = (
         F.col("degree_x") + F.col("degree_y") - F.col("common_neighbors")
     )
-    out = scored.select(
+    return scored.select(
         F.col("x").alias("id_x"),
         F.col("y").alias("id_y"),
         "common_neighbors",
@@ -606,9 +520,6 @@ def jaccard_link_prediction(
         "degree_y",
         F.round(F.col("common_neighbors") / union_size, 6).alias("jaccard"),
     )
-    return out.orderBy(
-        F.col("jaccard").desc(), F.col("id_x").asc(), F.col("id_y").asc()
-    ).limit(top_k)
 
 
 def association_rules(
@@ -768,8 +679,6 @@ def _k_core_driver(s_vals, t_vals, k: int, rounds: int):
     version's keep/filter step. Returns (vertices, alive_mask,
     final_degree); the caller derives (v, core_degree) rows and the
     convergence witness."""
-    import numpy as np
-
     uniq, codes = np.unique(
         np.concatenate([s_vals, t_vals]), return_inverse=True
     )
@@ -792,7 +701,6 @@ def k_core(
     rounds: int = 6,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    broadcast_edges_max: int = BROADCAST_EDGES_MAX,
     check_convergence: bool = False,
     small_graph_max: int = 2_000_000,
 ) -> DataFrame:
@@ -802,7 +710,8 @@ def k_core(
     The k-core is the classic "dense backbone" extraction — spam rings
     in link graphs, the stable catalog core in co-purchase networks.
     Returns the surviving vertices after ``rounds`` peels with their
-    in-core degree: (v, core_degree) ordered by v.
+    in-core degree: (v, core_degree) ordered by v. Self-loops and rows
+    with a null endpoint are dropped.
 
     Fixed rounds, not convergence detection (the pagerank convention):
     no driver round-trips, and a SQL engine replays the identical
@@ -813,23 +722,11 @@ def k_core(
     the fixed point, and real graphs fix within a few rounds —
     tests assert the fixed point on the testdata graph).
 
-    Plan shape per round: one vertex-keyed groupBy (degree) + two
-    semi joins of the edge list against the (node-bounded) survivor
-    set; the edge frame is localCheckpointed each round to keep the
-    lineage flat (the connected-components discipline). Edges come
-    from the bounded candidate generators, so every structure here is
-    model-sized, never corpus-sized — but the assumption is GUARDED,
-    not assumed: an edge list past ``broadcast_edges_max`` flips the
-    per-round survivor joins from broadcast to shuffle with a logged
-    warning (the cap_hot_keys discipline), so a corpus-scale caller
-    gets a slower-but-correct plan instead of a broadcast OOM.
-
-    Size-gated driver arm (round-13, the pagerank/connected_components
-    hybrid): a graph of ≤ ``small_graph_max`` undirected edges peels on
-    the driver in one pass — identical integer semantics
-    (equality-tested), none of the per-round localCheckpoint jobs whose
-    fixed scheduler overhead dwarfs the peel on model-sized graphs.
-    ``small_graph_max=0`` forces the distributed loop.
+    Arms (see :mod:`.graph`): a graph of <= ``small_graph_max``
+    undirected edges peels on the driver in one pass; otherwise the
+    loop state is the alive-vertex set with its in-subgraph degree, and
+    each round is two semi joins of the fixed edge table against the
+    (broadcast) survivors + one vertex-keyed degree count.
 
     Degree semantics at early stopping: ``core_degree`` is the degree
     in the LAST SURVIVING SUBGRAPH (after ``rounds`` peels), not among
@@ -846,96 +743,36 @@ def k_core(
     """
     if k < 1:
         raise ValueError("k_core: k must be >= 1")
-    # persist + count the UNDIRECTED edge list BEFORE the two-
-    # orientation union (round-14): the union's two branches each
-    # embed und's whole upstream pipeline (often a corpus-scale
-    # candidate generator), and the eager checkpoint ran it TWICE —
-    # the r14 stage profile showed every pair-pipeline stage
-    # duplicated (gr_kcore: 2x ~25s aggregate CPU). The count fills
-    # the cache serially, so both branches read it; it also supplies
-    # the size gate and the broadcast gate (directed rows = 2x
-    # undirected edges) — no extra action vs the old active.count().
-    und = _persist_tracked(
-        edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("__x"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("__y"),
-        ).filter(F.col("__x") != F.col("__y")).distinct()
+    g = EdgeTable(
+        edges, a_col, b_col, "k_core", small_graph_max, self_loops=False
     )
-    n_directed = 2 * und.count()
-    # size-gated driver arm (the pagerank/connected_components hybrid):
-    # candidate-pair graphs are model-sized by construction, and each
-    # distributed peel round costs a localCheckpoint job of fixed
-    # scheduler overhead that dwarfs microseconds of integer peeling.
-    # small_graph_max=0 forces the loop; both arms are equality-tested.
-    if small_graph_max and n_directed <= 2 * small_graph_max:
-        import numpy as np
-
-        # Arrow fetch (toPandas), not Row.collect(): two flat arrays
-        # instead of per-edge Python objects (review finding, r13
-        # advice — the Row path held multi-GB of objects just under
-        # the gate); both orientations are built driver-side so the
-        # union never touches the cluster
-        pdf = und.select("__x", "__y").toPandas()
-        x = pdf["__x"].to_numpy()
-        y = pdf["__y"].to_numpy()
+    if g.arrays is not None:
+        x, y = g.arrays
         uniq, alive, deg = _k_core_driver(
             np.concatenate([x, y]), np.concatenate([y, x]), int(k), rounds
         )
-        if check_convergence:
-            dropped = int((alive & (deg > 0) & (deg < int(k))).sum())
-            if dropped:
-                raise ValueError(
-                    f"k_core: peeling did not reach its fixed point "
-                    f"within rounds={rounds} — the final degree filter "
-                    f"would drop {dropped} vertex(es) whose edges are "
-                    f"still counted in surviving neighbors' "
-                    f"core_degree; raise rounds"
-                )
-        from pyspark.sql import types as T
+        live = alive & (deg > 0)
+        core = g.frame(
+            list(zip(uniq[live].tolist(), deg[live].tolist())),
+            [("v", g.vtype), ("core_degree", T.LongType())],
+        )
+    else:
 
-        vt = und.schema["__x"].dataType
-        schema = T.StructType(
-            [
-                T.StructField("v", vt),
-                T.StructField("core_degree", T.LongType()),
-            ]
-        )
-        keep_rows = alive & (deg >= int(k))
-        # np.unique returns ascending vertices, so rows are v-sorted
-        rows = [
-            (v, int(d))
-            for v, d in zip(
-                uniq[keep_rows].tolist(), deg[keep_rows].tolist()
+        def degrees(e):
+            return e.groupBy(F.col("a").alias("v")).agg(
+                F.count(F.lit(1)).cast("bigint").alias("core_degree")
             )
-        ]
-        return und.sparkSession.createDataFrame(rows, schema)
-    # distributed arm: both orientations read the FILLED und cache
-    active = und.select(
-        F.col("__x").alias("__s"), F.col("__y").alias("__t")
-    ).unionByName(
-        und.select(F.col("__y").alias("__s"), F.col("__x").alias("__t"))
-    )
-    active = _local_checkpoint_tracked(active)
-    use_bc = _graph_broadcast_gate(
-        active, broadcast_edges_max, "k_core", n=n_directed
-    )
-    for _ in range(rounds):
-        deg = active.groupBy("__s").agg(F.count(F.lit(1)).alias("__d"))
-        keep = deg.filter(F.col("__d") >= int(k)).select("__s")
-        active = (
-            active.join(_bc(keep, use_bc), "__s", "left_semi")
-            .join(
-                _bc(keep.select(F.col("__s").alias("__t")), use_bc),
-                "__t",
-                "left_semi",
+
+        def step(s):
+            keep = s.filter(F.col("core_degree") >= int(k)).select("v")
+            return degrees(
+                g.edges.join(g.bc(keep.withColumnRenamed("v", "a")), "a", "left_semi")
+                .join(g.bc(keep.withColumnRenamed("v", "b")), "b", "left_semi")
             )
-        )
-        active = _local_checkpoint_tracked(active)
-    final_deg = active.groupBy(F.col("__s").alias("v")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("core_degree")
-    )
+
+        core = g.loop(degrees(g.edges), step, rounds)
     if check_convergence:
-        dropped = final_deg.filter(F.col("core_degree") < int(k)).count()
+        dropped = core.filter(F.col("core_degree") < int(k)).count()
         if dropped:
             raise ValueError(
                 f"k_core: peeling did not reach its fixed point within "
@@ -943,9 +780,7 @@ def k_core(
                 f"{dropped} vertex(es) whose edges are still counted in "
                 f"surviving neighbors' core_degree; raise rounds"
             )
-    return (
-        final_deg.filter(F.col("core_degree") >= int(k)).orderBy("v")
-    )
+    return core.filter(F.col("core_degree") >= int(k)).orderBy("v")
 
 
 def _label_propagation_driver(s_vals, t_vals, rounds: int) -> dict:
@@ -976,7 +811,6 @@ def label_propagation(
     rounds: int = 4,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    broadcast_edges_max: int = BROADCAST_EDGES_MAX,
     small_graph_max: int = 500_000,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
@@ -987,112 +821,62 @@ def label_propagation(
     whole trajectory is deterministic INTEGER arithmetic — a SQL
     engine replays it exactly, no rounding discipline, no driver
     round-trips (the k_core convention). Returns (v, community,
-    community_size) ordered by v.
+    community_size) ordered by v. Self-loops and rows with a null
+    endpoint are dropped.
 
-    Plan shape per round: the node-bounded label table broadcast-joins
-    the directed edge list, one (vertex, label) groupBy counts the
-    votes, and a lexicographic struct-min picks the winner; labels
-    localCheckpoint each round (flat lineage). Everything is
-    model-sized — edges come from the bounded candidate generators —
-    but the assumption is GUARDED: an edge list past
-    ``broadcast_edges_max`` flips the per-round label join from
-    broadcast to shuffle with a logged warning (the cap_hot_keys
-    discipline), so a corpus-scale caller gets a slower-but-correct
-    plan instead of a broadcast OOM.
-
-    Size-gated driver arm (round-14, the k_core/pagerank/CC pattern):
-    a graph of ≤ ``small_graph_max`` undirected edges votes on the
-    driver in one pass — identical integer semantics (equality-
-    tested), none of the per-round localCheckpoint jobs whose fixed
-    scheduler overhead dwarfs the vote on model-sized graphs. The
-    gate reuses the count the broadcast gate needs anyway; the
-    default is lower than k_core's because the vote keeps a dict of
-    neighbor LISTS (per-edge Python overhead, not numpy arrays).
-    ``small_graph_max=0`` forces the distributed loop.
+    Arms (see :mod:`.graph`): a graph of <= ``small_graph_max``
+    undirected edges votes on the driver in one pass (the default is
+    lower than k_core's because the vote keeps a dict of neighbor
+    LISTS, per-edge Python objects rather than numpy arrays);
+    otherwise each round joins the (broadcast) label table to the fixed
+    edge table, counts the votes in one (vertex, label) groupBy, and
+    picks the winner with a lexicographic struct-min.
     """
-    # persist + count the UNDIRECTED edge list BEFORE the two-
-    # orientation union (round-14, the k_core fix): the union's two
-    # branches each embed und's whole upstream pipeline; the count
-    # fills the cache serially so both branches read it, and supplies
-    # both gates (directed rows = 2x undirected edges)
-    und = _persist_tracked(
-        edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("__x"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("__y"),
-        ).filter(F.col("__x") != F.col("__y")).distinct()
+    g = EdgeTable(
+        edges, a_col, b_col, "label_propagation", small_graph_max, self_loops=False
     )
-    n_directed = 2 * und.count()
-    if small_graph_max and n_directed <= 2 * small_graph_max:
-        from collections import Counter
-
-        from pyspark.sql import types as T
-
-        # Arrow fetch; both orientations built driver-side
-        pdf = und.select("__x", "__y").toPandas()
-        x = pdf["__x"].tolist()
-        y = pdf["__y"].tolist()
+    if g.arrays is not None:
+        x, y = (c.tolist() for c in g.arrays)
         labels_map = _label_propagation_driver(x + y, y + x, rounds)
         sizes = Counter(labels_map.values())
-        vt = und.schema["__x"].dataType
-        schema = T.StructType(
+        out = g.frame(
+            [(v, lbl, sizes[lbl]) for v, lbl in labels_map.items()],
             [
-                T.StructField("v", vt),
-                T.StructField("community", vt),
-                T.StructField("community_size", T.LongType()),
-            ]
+                ("v", g.vtype),
+                ("community", g.vtype),
+                ("community_size", T.LongType()),
+            ],
         )
-        rows = sorted(
-            (v, lbl, int(sizes[lbl])) for v, lbl in labels_map.items()
-        )
-        return und.sparkSession.createDataFrame(rows, schema)
-    # distributed arm: both orientations read the FILLED und cache
-    directed = _persist_tracked(
-        und.select(
-            F.col("__x").alias("__s"), F.col("__y").alias("__t")
-        ).unionByName(
-            und.select(F.col("__y").alias("__s"), F.col("__x").alias("__t"))
-        )
-    )
-    use_bc = _graph_broadcast_gate(
-        directed, broadcast_edges_max, "label_propagation", n=n_directed
-    )
-    labels = (
-        directed.select(F.col("__s").alias("__v"))
-        .distinct()
-        .withColumn("__l", F.col("__v"))
-    )
-    labels = _local_checkpoint_tracked(labels)
-    for _ in range(rounds):
-        neighbor_votes = directed.join(
-            _bc(labels.select(F.col("__v").alias("__t"), "__l"), use_bc),
-            "__t",
-        ).select(F.col("__s").alias("__v"), "__l")
-        self_votes = labels.select("__v", "__l")
-        winner = (
-            neighbor_votes.unionByName(self_votes)
-            .groupBy("__v", "__l")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .groupBy("__v")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("__c")).alias("__negc"),
-                        F.col("__l").alias("__lbl"),
-                    )
-                ).alias("__w")
+    else:
+
+        def step(s):
+            neighbor_votes = g.edges.join(
+                g.bc(s.select(F.col("v").alias("b"), "l")), "b"
+            ).select(F.col("a").alias("v"), "l")
+            return (
+                neighbor_votes.unionByName(s)
+                .groupBy("v", "l")
+                .agg(F.count(F.lit(1)).alias("c"))
+                .groupBy("v")
+                .agg(F.min(F.struct(-F.col("c"), "l")).alias("w"))
+                .select("v", F.col("w.l").alias("l"))
             )
-            .select("__v", F.col("__w.__lbl").alias("__l"))
+
+        init = (
+            g.edges.select(F.col("a").alias("v"))
+            .distinct()
+            .withColumn("l", F.col("v"))
         )
-        labels = _local_checkpoint_tracked(winner)
-    sizes = labels.groupBy(F.col("__l").alias("community")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("community_size")
-    )
-    return (
-        labels.select(F.col("__v").alias("v"), F.col("__l").alias("community"))
-        .join(_bc(sizes, use_bc), "community")
-        .select("v", "community", "community_size")
-        .orderBy("v")
-    )
+        labels = g.loop(init, step, rounds)
+        sizes = labels.groupBy(F.col("l").alias("community")).agg(
+            F.count(F.lit(1)).cast("bigint").alias("community_size")
+        )
+        out = (
+            labels.select("v", F.col("l").alias("community"))
+            .join(g.bc(sizes), "community")
+            .select("v", "community", "community_size")
+        )
+    return out.orderBy("v")
 
 
 def degree_histogram(

@@ -298,7 +298,7 @@ def leakage_safe_split(
     # the exact failure this function exists to prevent. Fail loudly
     # instead. Integral-width differences (int vs bigint) are fine:
     # Spark's equi-join widens them losslessly with no null-miss.
-    from .dedup import _is_integral
+    from .graph import _is_integral
 
     kt = df.schema[key].dataType
     pt = pairs.schema["id_a"].dataType

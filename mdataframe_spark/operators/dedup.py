@@ -26,15 +26,14 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .graph import EdgeTable
 from .text import normalize_text
 
 # Intermediates persisted by the candidate-pair builders (banded
 # signature / shingle tables referenced by both sides of a self-join)
 # register with the engine-wide cache registry; call release_caches()
 # after the consuming action to free executor memory between pipelines.
-from ..cache import local_checkpoint_tracked as _local_checkpoint_tracked  # noqa: E402
 from ..cache import persist_tracked as _persist_tracked  # noqa: E402
-from ..cache import release_tracked as _release_tracked  # noqa: E402
 from ..cache import release_caches  # noqa: E402,F401  (re-export)
 
 
@@ -909,14 +908,6 @@ def embedding_near_dup_pairs(
 # ---------------------------------------------------------------------------
 # connected components (pair graph -> dedup groups)
 # ---------------------------------------------------------------------------
-def _is_integral(dt) -> bool:
-    """True for the integral Spark types that widen losslessly to
-    bigint (byte/short/int/long)."""
-    from pyspark.sql import types as T
-
-    return isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
-
-
 def _components_driver(rows) -> dict:
     """Union-find (path compression, min id kept as root) over collected
     edge rows — the small-graph arm of :func:`connected_components`.
@@ -955,7 +946,8 @@ def connected_components(
     """Connected components of the near-dup pair graph: the step that
     turns candidate PAIRS into transitive dedup GROUPS (keep one doc
     per component). Returns ``(v, component)`` with component = the
-    minimum vertex id reachable from ``v``.
+    minimum vertex id reachable from ``v``. Rows with a null endpoint
+    are dropped; a self-loop keeps its vertex as a singleton.
 
     Algorithm: iterative min-label propagation (label(v) <-
     min(label(v), min over neighbors)) plus one pointer-jumping step
@@ -965,19 +957,8 @@ def connected_components(
     (SoCC'14). Near-dup graphs are shallow (dup clusters are dense),
     so this converges in a handful of rounds; a graph that fails to
     converge within ``max_iter`` raises rather than returning partial
-    labels.
-
-    Plan shape per round: one edge-label join + groupBy (shuffle keyed
-    by vertex), one self-join for the jump, one exact changed-vertex
-    count as the fixpoint witness. Driver traffic is one scalar per
-    round. Each round's label frame is an EAGER localCheckpoint, and
-    the predecessor's blocks are released as soon as the successor
-    materializes: persist alone does not bound an iterative loop —
-    the plan still grows 4^rounds (labels appears four times per
-    round) and Catalyst analysis dominates wall-clock (measured 330 s
-    on a 20-vertex path before checkpointing; ~6 s after) — and
-    holding every round's frame would pin O(rounds) corpus-scale
-    frames. At most edges + 2 label frames are ever held.
+    labels. Each round ends in one exact changed-vertex count, the
+    fixpoint witness.
 
     Id-type-generic: vertex ids may be any orderable atomic type —
     min-label propagation needs only an ordering, so string doc ids
@@ -986,102 +967,55 @@ def connected_components(
     bigint; any other type mismatch raises rather than letting an
     implicit cast null ids out silently.
 
-    Size-gated driver arm: a pair graph of <= ``small_graph_max``
-    edge rows skips the loop entirely — edges collect once and a
+    A graph of <= ``small_graph_max`` undirected edges is solved by a
     driver union-find (min id as root: identical labels by
-    construction) answers in one pass. This is the RIGHT plan for the
-    common case: near-dup pair graphs are orders of magnitude smaller
-    than the corpus (the dedup family's df-caps bound them by design),
-    and each distributed round costs fixed scheduler/JIT overhead that
-    dwarfs microseconds of driver CPU (measured: the loop spends ~5 s
-    on a graph union-find closes in <0.1 s). Beyond the gate — pair
-    graphs that would not fit driver memory — the O(log diameter)
-    loop takes over unchanged. ``small_graph_max=0`` forces the loop.
+    construction); see :mod:`.graph` for the arms.
     """
-    ta = pairs.schema[id_a].dataType
-    tb = pairs.schema[id_b].dataType
-    if ta != tb:
-        if _is_integral(ta) and _is_integral(tb):
-            pairs = pairs.withColumn(id_a, F.col(id_a).cast("bigint")).withColumn(
-                id_b, F.col(id_b).cast("bigint")
-            )
-        else:
-            raise TypeError(
-                f"connected_components: pair columns must share one id type, "
-                f"got {id_a}:{ta.simpleString()} vs {id_b}:{tb.simpleString()}"
-            )
-    e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    if small_graph_max and small_graph_max > 0:
-        e = _persist_tracked(e)
-        if e.count() <= small_graph_max:
-            from pyspark.sql import types as T
+    g = EdgeTable(
+        pairs, id_a, id_b, "connected_components", small_graph_max, self_loops=True
+    )
+    if g.arrays is not None:
+        x, y = g.arrays
+        labels_map = _components_driver(zip(x.tolist(), y.tolist()))
+        return g.frame(
+            sorted(labels_map.items()), [("v", g.vtype), ("component", g.vtype)]
+        )
 
-            labels_map = _components_driver(
-                [(r["a"], r["b"]) for r in e.collect()]
-            )
-            vt = e.schema["a"].dataType
-            schema = T.StructType(
-                [T.StructField("v", vt), T.StructField("component", vt)]
-            )
-            return e.sparkSession.createDataFrame(
-                sorted(labels_map.items()), schema
-            )
-    edges = _persist_tracked(
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    )
-    # the loop frames are CHECKPOINTED, not just persisted: each round's
-    # plan references `labels` four times (nbr, stepped, both self-join
-    # sides), so a lazy loop's logical plan grows 4^rounds and Catalyst
-    # analysis — not data — dominates (measured: 330 s for a 20-vertex
-    # path). localCheckpoint truncates to a LogicalRDD leaf per round.
-    labels = _local_checkpoint_tracked(
-        edges.select(F.col("a").alias("v")).distinct().withColumn("lbl", F.col("v"))
-    )
-    prev_round = labels
-    for _ in range(max_iter):
+    def step(s):
+        lab = s.select("v", "lbl")
         nbr = (
-            edges.join(labels, edges["b"] == labels["v"])
-            .groupBy("a")
+            g.edges.join(g.bc(lab.withColumnRenamed("v", "b")), "b")
+            .groupBy(F.col("a").alias("v"))
             .agg(F.min("lbl").alias("nlbl"))
         )
-        stepped = labels.join(nbr, labels["v"] == nbr["a"], "left").select(
-            labels["v"].alias("v"),
-            F.least(labels["lbl"], F.coalesce(nbr["nlbl"], labels["lbl"])).alias(
-                "lbl"
-            ),
-            # carry the pre-round label so the fixpoint witness below is
-            # a plain filter+count over the persisted frame — no extra
-            # join, and id-type-generic (no numeric sum)
-            labels["lbl"].alias("prev"),
+        # carry the pre-round label so the fixpoint witness is a plain
+        # filter+count over the checkpointed state (id-type-generic)
+        stepped = lab.join(nbr, "v", "left").select(
+            "v",
+            F.least("lbl", F.coalesce("nlbl", "lbl")).alias("lbl"),
+            F.col("lbl").alias("prev"),
         )
         # pointer jump: adopt the label's own label (labels are vertex
         # ids, so the self-join always matches; coalesce is belt and
         # braces for the root vertices)
         x, y = stepped.alias("x"), stepped.alias("y")
-        # eager checkpoint materializes the round's labels; the
-        # predecessor is then dead — release it NOW rather than at
-        # query end, so at most edges + 2 label frames are ever held
-        # (at 10^9 vertices x ~8 rounds the accumulated pins would
-        # evict exactly when the loop needs memory most)
-        jumped = _local_checkpoint_tracked(
-            x.join(y, F.col("x.lbl") == F.col("y.v"), "left").select(
-                F.col("x.v").alias("v"),
-                F.coalesce(F.col("y.lbl"), F.col("x.lbl")).alias("lbl"),
-                F.col("x.prev").alias("prev"),
-            )
+        return x.join(g.bc(y), F.col("x.lbl") == F.col("y.v"), "left").select(
+            F.col("x.v").alias("v"),
+            F.coalesce(F.col("y.lbl"), F.col("x.lbl")).alias("lbl"),
+            F.col("x.prev").alias("prev"),
         )
-        _release_tracked(prev_round)
-        prev_round = jumped
-        # exact fixpoint witness: labels only decrease, so zero moved
-        # labels this round means converged. One scalar to the driver.
-        changed = jumped.filter(F.col("lbl") != F.col("prev")).count()
-        labels = jumped.select("v", "lbl")
-        if changed == 0:
-            return labels.select("v", F.col("lbl").alias("component"))
-    raise RuntimeError(
-        f"connected_components: no fixpoint within {max_iter} rounds "
-        "(graph diameter > 2^rounds — raise max_iter)"
+
+    init = (
+        g.edges.select(F.col("a").alias("v"))
+        .distinct()
+        .withColumn("lbl", F.col("v"))
     )
+    # labels only decrease, so zero moved labels means converged
+    labels = g.loop(
+        init, step, max_iter,
+        until=lambda s: s.filter(F.col("lbl") != F.col("prev")).count() == 0,
+    )
+    return labels.select("v", F.col("lbl").alias("component"))
 
 
 # ---------------------------------------------------------------------------

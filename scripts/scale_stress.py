@@ -948,8 +948,9 @@ def main():
         "survivor semi-joins — linear in EDGES per peel round with no",
         "wedge/pair term at all, so the ratio should track the edge",
         "count where jaccard's tracks Σ deg². The survivor tables are",
-        "node-bounded and broadcast below broadcast_edges_max (5M",
-        "directed edges), with a logged shuffle-join fallback above —",
+        "node-bounded and broadcast below the one BROADCAST_EDGES_MAX",
+        "cut of `operators/graph.py` (5M directed edges, not a per-call",
+        "option), shuffle-joined above it, with the arm logged —",
         "the guarded version of the model-sized-graph assumption.",
         "This row FORCES the distributed loop (small_graph_max=0):",
         "round-13 gave k_core the pagerank-style driver arm, which",

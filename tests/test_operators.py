@@ -912,31 +912,28 @@ def test_connected_components_vs_union_find(spark):
     ]
     for pairs in cases:
         df = spark.createDataFrame(pairs, ["id_a", "id_b"])
-        # both arms must agree with the reference: the size-gated
-        # driver union-find (default) and the distributed loop
-        # (small_graph_max=0 forces it)
+        # the driver arm; tests/test_graph.py holds the loop arms to it
         got_driver = {
             r["v"]: r["component"]
             for r in connected_components(df).collect()
         }
-        got_loop = {
-            r["v"]: r["component"]
-            for r in connected_components(df, small_graph_max=0).collect()
-        }
         assert got_driver == union_find(pairs), pairs
-        assert got_loop == got_driver, pairs
 
 
-def test_connected_components_releases_per_round_persists(spark):
-    """The loop must unpersist each round's predecessor label frame as
-    soon as the fixpoint count materializes its successor: on a
-    long-path graph (many rounds) the cache may hold edges + the live
-    label frame — NOT one frame per round (at 10^9 vertices x 8 rounds
-    the accumulated pins would evict exactly when the loop needs
-    memory). Also: early release must not change the answer."""
+@pytest.mark.parametrize(
+    "op", ["connected_components", "pagerank", "k_core", "label_propagation"]
+)
+def test_connected_components_releases_per_round_persists(spark, op):
+    """Each graph loop must release every round's predecessor state as
+    soon as its successor materializes: on a long-path graph (many
+    rounds) the cache may hold the edge table + the final state — NOT
+    one frame per round (at 10^9 vertices x 8 rounds the accumulated
+    pins would evict exactly when the loop needs memory). Also: early
+    release must not change the answer."""
     from mdataframe_spark import cache as _cache
-    from mdataframe_spark.operators.dedup import connected_components
+    from mdataframe_spark.operators import baskets, dedup
 
+    fn = getattr(dedup if op == "connected_components" else baskets, op)
     _cache.release_caches()
     jvm = spark.sparkContext._jsc.getPersistentRDDs()
     base = jvm.size()
@@ -944,14 +941,13 @@ def test_connected_components_releases_per_round_persists(spark):
     df = spark.createDataFrame(pairs, ["id_a", "id_b"])
     # small_graph_max=0 forces the distributed loop — the arm this
     # release discipline exists for
-    got = {
-        r["v"]: r["component"]
-        for r in connected_components(df, small_graph_max=0).collect()
-    }
-    assert got == {v: 200 for v in range(200, 241)}
+    rows = fn(df, small_graph_max=0).collect()
+    if op == "connected_components":
+        got = {r["v"]: r["component"] for r in rows}
+        assert got == {v: 200 for v in range(200, 241)}
     held = spark.sparkContext._jsc.getPersistentRDDs().size() - base
-    # edges + final label frame only (the rounds' predecessors are gone)
-    assert held <= 2, f"{held} persisted frames held after CC (expected <=2)"
+    # edge table + final state only (the rounds' predecessors are gone)
+    assert held <= 2, f"{held} persisted frames held after {op} (expected <=2)"
     _cache.release_caches()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == base
 

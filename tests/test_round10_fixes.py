@@ -1,5 +1,4 @@
-"""Regression tests for the round-10 ADVICE items and the graph
-broadcast guard:
+"""Regression tests for the round-10 ADVICE items:
 
 1. histogram_quantile_gate's exact arm must drop NaN like the sketch
    arm (and the DuckDB oracle) do — otherwise the two arms certify
@@ -8,9 +7,7 @@ broadcast guard:
    p1+p2+1 multiply precision rule (18+prec == 38 was a silent
    overflow: product precision 39 rounds in Spark, stays exact in
    DuckDB).
-3. k_core/label_propagation stop broadcasting their node tables past
-   broadcast_edges_max (logged fallback, identical results), and
-   k_core's check_convergence raises a descriptive error when the
+3. k_core's check_convergence raises a descriptive error when the
    fixed peel schedule stops before the fixed point.
 """
 
@@ -19,7 +16,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from mdataframe_spark.operators.baskets import k_core, label_propagation
+from mdataframe_spark.operators.baskets import k_core
 from mdataframe_spark.operators.sketches import histogram_quantile_gate
 from mdataframe_spark.operators.timeseries import ewma_smooth
 
@@ -80,86 +77,13 @@ def test_ewma_guard_still_admits_max_lag_17(spark):
         assert out[t] == pytest.approx(num / den, abs=2e-6)
 
 
-# --- 3. graph broadcast guard + k_core convergence check -------------
+# --- 3. k_core convergence check ------------------------------------
 
 def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "id_a BIGINT, id_b BIGINT")
 
 
 TRIANGLE_TAIL = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)]
-
-
-def test_kcore_shuffle_fallback_matches_broadcast_arm(spark, caplog):
-    # small_graph_max=0 forces the distributed loop on both sides —
-    # the broadcast-vs-shuffle comparison is about the LOOP's joins
-    e = _edges(spark, TRIANGLE_TAIL)
-    bc = sorted(
-        tuple(r) for r in k_core(e, k=2, small_graph_max=0).collect()
-    )
-    with caplog.at_level("WARNING", logger="mdataframe_spark.operators.baskets"):
-        shuffled = sorted(
-            tuple(r)
-            for r in k_core(
-                e, k=2, broadcast_edges_max=1, small_graph_max=0
-            ).collect()
-        )
-    assert shuffled == bc == [(1, 2), (2, 2), (3, 2)]
-    assert any("broadcast_edges_max" in m for m in caplog.messages)
-
-
-def test_kcore_driver_arm_matches_distributed_loop(spark):
-    # the size-gated driver peel (default) and the distributed loop
-    # (small_graph_max=0) must agree row-for-row, including degrees
-    e = _edges(spark, TRIANGLE_TAIL + [(5, 6), (5, 7), (6, 7), (4, 6)])
-    driver = sorted(tuple(r) for r in k_core(e, k=2).collect())
-    dist = sorted(
-        tuple(r) for r in k_core(e, k=2, small_graph_max=0).collect()
-    )
-    assert driver == dist
-    assert driver  # non-degenerate fixture: the 2-core is non-empty
-
-
-def test_lpa_shuffle_fallback_matches_broadcast_arm(spark, caplog):
-    # small_graph_max=0 forces the distributed loop on both sides —
-    # the broadcast-vs-shuffle comparison is about the LOOP's joins
-    cliques = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12), (3, 10)]
-    e = _edges(spark, cliques)
-    bc = sorted(
-        tuple(r)
-        for r in label_propagation(e, rounds=6, small_graph_max=0).collect()
-    )
-    with caplog.at_level("WARNING", logger="mdataframe_spark.operators.baskets"):
-        shuffled = sorted(
-            tuple(r)
-            for r in label_propagation(
-                e, rounds=6, broadcast_edges_max=1, small_graph_max=0
-            ).collect()
-        )
-    assert shuffled == bc
-    assert any("broadcast_edges_max" in m for m in caplog.messages)
-
-
-def test_lpa_driver_arm_matches_distributed_loop(spark):
-    # the size-gated driver vote (default) and the distributed loop
-    # (small_graph_max=0) must agree row-for-row, including community
-    # sizes — two triangles joined by a bridge plus a pendant chain
-    cliques = [
-        (1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12), (3, 10),
-        (12, 20), (20, 21),
-    ]
-    e = _edges(spark, cliques)
-    for rounds in (1, 4, 6):
-        driver = sorted(
-            tuple(r) for r in label_propagation(e, rounds=rounds).collect()
-        )
-        dist = sorted(
-            tuple(r)
-            for r in label_propagation(
-                e, rounds=rounds, small_graph_max=0
-            ).collect()
-        )
-        assert driver == dist
-        assert driver  # non-degenerate fixture
 
 
 def test_kcore_check_convergence_raises_on_early_stop(spark):

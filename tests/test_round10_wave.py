@@ -342,36 +342,6 @@ def test_kendall_constant_margin_counts_are_zero_not_null(spark):
     assert row["tau_b"] is None
 
 
-def test_graph_broadcast_limit_zero_means_never_broadcast(spark):
-    from mdataframe_spark.operators.baskets import k_core, label_propagation
-
-    pairs = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)]
-    e = spark.createDataFrame(pairs, "id_a BIGINT, id_b BIGINT")
-    # small_graph_max=0 forces the distributed loop (the arm the
-    # broadcast_edges_max knob actually governs)
-    bc = sorted(
-        tuple(r) for r in k_core(e, k=2, small_graph_max=0).collect()
-    )
-    z = sorted(
-        tuple(r)
-        for r in k_core(
-            e, k=2, broadcast_edges_max=0, small_graph_max=0
-        ).collect()
-    )
-    assert z == bc
-    lbc = sorted(
-        tuple(r)
-        for r in label_propagation(e, rounds=4, small_graph_max=0).collect()
-    )
-    lz = sorted(
-        tuple(r)
-        for r in label_propagation(
-            e, rounds=4, broadcast_edges_max=0, small_graph_max=0
-        ).collect()
-    )
-    assert lz == lbc
-
-
 # --- count-min join-size gate ----------------------------------------
 
 def test_join_size_gate_exact_on_wide_sketch(spark):

@@ -557,30 +557,6 @@ def test_seasonal_profile_pre_epoch_hour_domain(spark):
     assert out[0]["n"] == 2
 
 
-def test_jaccard_driver_arm_matches_distributed(spark):
-    """The size-gated driver arm and the distributed wedge plan are
-    label-identical — including on a graph where a hub is dropped
-    (reported degrees stay the ORIGINAL ones on both arms)."""
-    from mdataframe_spark.operators.baskets import jaccard_link_prediction
-
-    edges = [(1, 2), (2, 3), (2, 4), (3, 4), (4, 5), (1, 5),
-             # vertex 9 is a hub when max_degree=3
-             (9, 1), (9, 2), (9, 3), (9, 5)]
-    df = spark.createDataFrame(edges, ["id_a", "id_b"])
-
-    def rows(small_max):
-        return [
-            tuple(r)
-            for r in jaccard_link_prediction(
-                df, max_degree=3, top_k=50, small_graph_max=small_max
-            ).collect()
-        ]
-
-    driver = rows(2_000_000)
-    dist = rows(0)
-    assert driver == dist and len(driver) > 0
-
-
 def test_embedding_drift_hand(spark):
     from mdataframe_spark.operators.similarity import embedding_drift
 
