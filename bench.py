@@ -7,13 +7,19 @@ Queries execute via a noop sink (full computation, no driver collect),
 so the measurement is engine time, not toPandas serialization.
 
 Each query is timed as the MIN over two passes at the target SF, after
-a small-SF warmup pass. Rationale (measured on this box): the FIRST
-execution of a query shape pays whole-stage-codegen compilation and
-C2 JIT of the generated classes — a trivial groupBy ran 5.5s cold vs
-1.1s warm, and the small-SF warmup alone does not push the generated
-code over the JIT compile threshold. Min-of-two reports steady-state
-engine time and cuts single-JVM run-to-run variance (observed 112s vs
-183s for identical code on the same idle box).
+a small-SF warmup pass. Rationale: an execution of a query shape pays
+whole-stage-codegen compilation for every generated class missing from
+Spark's codegen cache, plus C2 JIT of the generated classes — a trivial
+groupBy ran 5.5s cold vs 1.1s warm, and the small-SF warmup alone does
+not push the generated code over the JIT compile threshold. A class is
+missing on its shape's first run, and again whenever the LRU cache has
+evicted it: the 71 queries generate ~2,400 classes in all, far more
+than the cache holds (``session.CODEGEN_CACHE_ENTRIES``), so the
+warmups evict each other's classes. The largest single query generates
+93, within the cache, so a query's second timed pass compiles nothing.
+Min-of-two reports steady-state engine time and cuts single-JVM
+run-to-run variance (observed 112s vs 183s for identical code on the
+same idle box).
 """
 
 from __future__ import annotations
@@ -155,8 +161,10 @@ def main():
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_spark("bench")
     # warmup: run every headline query once at the smallest SF so the
-    # timed pass measures steady-state execution, not whole-stage
-    # codegen compilation and JIT (2-5s per novel query shape)
+    # timed pass measures steady-state execution, not JIT (2-5s per
+    # novel query shape). It does not keep the codegen cache warm: the
+    # later queries' classes evict the earlier ones', so each query's
+    # first timed pass recompiles what its second then reuses
     warm_dir = "/root/testdata/sf0.001"
     for name in HEADLINE:
         try:

@@ -285,18 +285,11 @@ class MFrame:
         function's name).
         """
         from pyspark.sql import types as T
-        from pyspark.sql.functions import pandas_udf
 
         if axis == 0:
-            # functionType form: this module uses `from __future__ import
-            # annotations`, which stringifies type hints and breaks
-            # pandas_udf's hint inspection
-            from pyspark.sql.functions import PandasUDFType
+            from ._udf import double_series_udf
 
-            col_udf = pandas_udf(
-                lambda s: fn(s).astype(float), "double", PandasUDFType.SCALAR
-            )
-
+            col_udf = double_series_udf(fn)
             out = self.df.withColumns({c: col_udf(F.col(c)) for c in self.data_columns})
             return self._derive(out, "apply_ax0")
         if axis == 1:

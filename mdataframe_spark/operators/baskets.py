@@ -12,6 +12,7 @@ engine reproduces the fixpoint trajectory bit-for-bit).
 from __future__ import annotations
 
 from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -135,6 +136,13 @@ def co_occurrence_pairs(
     )
 
 
+def _round_half_up(x: float, places: int) -> float:
+    """``x`` rounded as Spark's ``F.round`` rounds a double: HALF_UP on
+    its shortest decimal repr. Python's ``round`` is half-even on the
+    exact binary value, so the two disagree on ``...5`` ties."""
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP))
+
+
 def _pagerank_driver(
     edge_rows, iterations: int, damping: float, iter_decimals: int
 ) -> dict:
@@ -149,11 +157,11 @@ def _pagerank_driver(
         nbrs.setdefault(b, set()).add(a)
     n = len(nbrs)
     base = (1.0 - damping) / n
-    ranks = {v: round(1.0 / n, iter_decimals) for v in nbrs}
+    ranks = {v: _round_half_up(1.0 / n, iter_decimals) for v in nbrs}
     deg = {v: len(ns) for v, ns in nbrs.items()}
     for _ in range(iterations):
         ranks = {
-            v: round(
+            v: _round_half_up(
                 base
                 + damping * sum(ranks[u] / deg[u] for u in sorted(ns)),
                 iter_decimals,
@@ -189,17 +197,21 @@ def pagerank(
     Arms (see :mod:`.graph`): a graph of <= ``small_graph_max``
     undirected edges runs the trajectory on the driver; otherwise each
     round is one edge join against the (broadcast) rank table + one
-    vertex-keyed sum. Returns (v, rank) with rank rounded to 6 dp.
+    vertex-keyed sum. Returns (v, rank) with rank rounded to 6 dp; an
+    empty graph has no vertices and yields no rows.
     """
     g = EdgeTable(pairs, id_a, id_b, "pagerank", small_graph_max, self_loops=True)
+    fields = [("v", g.vtype), ("rank", T.DoubleType())]
+    if g.n == 0:  # (1 - d) / N is undefined for N = 0
+        return g.frame([], fields)
     if g.arrays is not None:
         x, y = g.arrays
         ranks_map = _pagerank_driver(
             zip(x.tolist(), y.tolist()), iterations, damping, iter_decimals
         )
         return g.frame(
-            sorted((v, round(r, 6)) for v, r in ranks_map.items()),
-            [("v", g.vtype), ("rank", T.DoubleType())],
+            sorted((v, _round_half_up(r, 6)) for v, r in ranks_map.items()),
+            fields,
         )
     deg = g.edges.groupBy(F.col("a").alias("v")).agg(
         F.count(F.lit(1)).alias("deg")
@@ -376,10 +388,8 @@ def global_clustering(
 def _jaccard_driver(edges, max_degree, top_k):
     """Driver-arm common-neighbor Jaccard over a collected edge list —
     label-identical to the distributed wedge plan (equality-tested).
-    Rounds with decimal HALF_UP to match Spark's F.round (Python's
-    built-in round is banker's and diverges on exact .5 ties)."""
+    Rounds with :func:`_round_half_up`, as Spark's F.round does."""
     from collections import defaultdict
-    from decimal import ROUND_HALF_UP, Decimal
 
     nbrs = defaultdict(set)
     for a, b in edges:
@@ -402,11 +412,7 @@ def _jaccard_driver(edges, max_degree, top_k):
         if (x, y) in edge_set:
             continue
         dx, dy = len(nbrs[x]), len(nbrs[y])
-        jac = float(
-            Decimal(repr(c / (dx + dy - c))).quantize(
-                Decimal("1e-6"), ROUND_HALF_UP
-            )
-        )
+        jac = _round_half_up(c / (dx + dy - c), 6)
         out.append((x, y, c, dx, dy, jac))
     out.sort(key=lambda r: (-r[5], r[0], r[1]))
     return out[:top_k]

@@ -12,6 +12,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Entries in Spark's generated-class cache (spark.sql.codegen.cache.
+# maxEntries, default 100; a static conf, so it is set before the
+# session starts). The cache is LRU, so a re-run recompiles every class
+# that more than this many newer classes pushed out. Counted with
+# CodegenMetrics.METRIC_COMPILATION_TIME, one pass generates 177
+# distinct classes on the perfbench de_matrix workload and 195 on
+# corpus_curation, and the largest single bench.py HEADLINE query
+# (pipe_fineweb_recipe, sf0.1) 93. With the default, every warm pass
+# of either workload recompiled 173-191 classes. This size, twice the
+# largest per-pass count rounded up, holds a whole pass plus the few
+# classes a re-run adds where a plan inlines a data-derived literal:
+# the first warm pass compiles 0-12 classes and every later one 0.
+CODEGEN_CACHE_ENTRIES = 400
+
 
 def get_spark(
     app_name: str = "mdataframe_spark",
@@ -39,6 +53,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # ContextCleaner reclaims broadcasts/shuffle files only when the
         # DRIVER JVM garbage-collects their references; the default
         # periodic-GC interval (30min) lets a long multi-query session

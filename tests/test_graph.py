@@ -10,10 +10,12 @@ kernel run here on the normalised edge list.
 """
 
 import logging
+import random
 from collections import Counter
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from mdataframe_spark.operators import graph
 from mdataframe_spark.operators.baskets import (
@@ -21,6 +23,7 @@ from mdataframe_spark.operators.baskets import (
     _k_core_driver,
     _label_propagation_driver,
     _pagerank_driver,
+    _round_half_up,
     jaccard_link_prediction,
     k_core,
     label_propagation,
@@ -94,7 +97,7 @@ def _expected(op, pairs):
         return sorted(_components_driver(e).items())
     if op == "pagerank":
         ranks = _pagerank_driver(e, iterations=5, damping=0.85, iter_decimals=9)
-        return sorted((v, round(r, 6)) for v, r in ranks.items())
+        return sorted((v, _round_half_up(r, 6)) for v, r in ranks.items())
     if op == "k_core":
         uniq, alive, deg = _k_core_driver(np.array(x + y), np.array(y + x), 2, 6)
         keep = alive & (deg >= 2)
@@ -131,6 +134,40 @@ def test_arms_agree(spark, reference, monkeypatch, caplog, op, arm):
         records = [m for m in caplog.messages if m.startswith(f"{op}: ")]
         assert len(records) == 1, records
         assert records[0].startswith(f"{op}: {arm},"), records
+
+
+@pytest.mark.parametrize("arm", ["driver arm", "loop"])
+@pytest.mark.parametrize("op", list(OPS))
+def test_empty_graph(spark, op, arm):
+    """No edges (or only null-endpoint rows): every operator returns an
+    empty frame on either arm."""
+    fn, params = OPS[op]
+    kw = {} if arm == "driver arm" else {"small_graph_max": 0}
+    df = spark.createDataFrame([(None, 1)], "id_a BIGINT, id_b BIGINT")
+    assert fn(df, **params, **kw).collect() == []
+
+
+def test_round_half_up_matches_spark_round(spark):
+    """The driver arms' rounding equals F.round on ``...5`` ties at the
+    6 and 9 places the graph operators round to, where Python's round
+    (half-even on the binary value) differs."""
+    rng = random.Random(7)
+    cases = [
+        (float(f"{rng.randrange(3)}.{rng.randrange(10**p):0{p}d}5"), p)
+        for p in (6, 9)
+        for _ in range(200)
+    ] + [(5e-07, 6), (1.5e-06, 6), (2.5e-06, 6), (2.5e-10, 9)]
+    df = spark.createDataFrame(
+        [(i, x) for i, (x, _) in enumerate(cases)], "i INT, x DOUBLE"
+    )
+    spark_rounded = {
+        r.i: (r.r6, r.r9)
+        for r in df.select("i", F.round("x", 6).alias("r6"), F.round("x", 9).alias("r9"))
+        .collect()
+    }
+    for i, (x, places) in enumerate(cases):
+        assert _round_half_up(x, places) == spark_rounded[i][places == 9], (x, places)
+    assert any(round(x, p) != _round_half_up(x, p) for x, p in cases)
 
 
 def test_reference_semantics(reference):
