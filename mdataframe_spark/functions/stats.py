@@ -5,19 +5,45 @@ The reference obtains both from R — ``FDR`` comes out of edgeR's
 149, 255-270) and ``ranking`` out of NOISeq (differential.py:599-600,
 727-739). Here they are native Spark window expressions (SURVEY.md §2.5
 W1/W2) — the first fully R-free pieces of the stats stack.
+
+Every operator that needs an exact global total order — ``bh_adjust``,
+``holm_adjust`` and ``storey_qvalue`` here, ``gain_deciles``
+(operators/evaluation.py), ``rfm_scores`` (operators/events.py) and
+``balance_shards`` (operators/datasets.py) — answers on one of two
+arms, chosen by :func:`_range_arm` from the size of its frame:
+
+- **Window arm.** A frame of at most ``SINGLE_REDUCER_MAX_ROWS`` rows
+  is ordered by one unpartitioned window: a single reducer holds the
+  whole order, which at that size is the cheapest plan.
+- **Range arm.** A larger frame is ranked by :func:`_range_rank`:
+  bucket cuts from approximate quantiles of the sort key, one count
+  aggregation whose O(B) offsets come back to the driver, and a
+  bucket-partitioned ``row_number``; offset + local rank is the exact
+  global rank, and no window spans the frame. A running min or max
+  over that rank factorizes across the buckets
+  (:func:`_running_extreme`).
+
+Both arms give identical values (tests/test_rank_arms.py forces the
+range arm by setting ``SINGLE_REDUCER_MAX_ROWS`` to 0). Every gated call
+logs one INFO decision record on this module's logger: the operator,
+the arm, the probed row count and the cut.
 """
 
 from __future__ import annotations
 
+import logging
+import math
 import warnings
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Unpartitioned (single-reducer) window thresholds: every row moves
-# through one task, so above WARN_ROWS the caller gets a warning and
-# above MAX_ROWS a hard error unless they opted in with allow_global.
+_log = logging.getLogger(__name__)
+
+# Rows above which an exact total order leaves the single-reducer
+# window for the range arm. add_rank has no range arm: it warns above
+# WARN_ROWS and raises above MAX_ROWS unless allow_global=True.
 SINGLE_REDUCER_WARN_ROWS = 1_000_000
 SINGLE_REDUCER_MAX_ROWS = 10_000_000
 
@@ -49,6 +75,107 @@ def _guard_unpartitioned(df: DataFrame, what: str, allow_global: bool) -> None:
         )
 
 
+def _range_arm(df: DataFrame, op: str, n: Optional[int] = None) -> bool:
+    """True when ``df`` holds more than ``SINGLE_REDUCER_MAX_ROWS`` rows,
+    i.e. ``op`` must take the range arm. ``n`` is a row count the caller
+    already holds; without it one ``limit(cut + 1).count()`` probes the
+    frame (at most cut + 1 rows scanned, no shuffle)."""
+    cut = SINGLE_REDUCER_MAX_ROWS
+    if n is None:
+        n = df.limit(cut + 1).count()
+    arm = "range arm" if n > cut else "window arm"
+    _log.info("%s: %s, %d rows vs SINGLE_REDUCER_MAX_ROWS %d", op, arm, n, cut)
+    return n > cut
+
+
+def _range_rank(
+    df: DataFrame,
+    key: str,
+    order: Sequence[Column] = (),
+    descending: bool = False,
+) -> tuple[DataFrame, int, int]:
+    """The range arm's exact global rank: ``df`` plus ``__rank``, the
+    1-based rank by ``key`` (descending if asked) then the ``order``
+    columns, and ``__bkt``, the range bucket of the row; also returns
+    n, the number of non-null keys, and the number of rows.
+
+    Keys are ordered as Spark's window orders them, NaN above every
+    number and NULL after everything. One approximate-quantile job gives
+    up to B - 1 cuts, B four per core (at least 16, at most 256). A
+    row's bucket depends on its key alone and grows along the order, so
+    tied keys share a bucket, and the bucket-partitioned ``row_number``
+    plus the row count of all earlier buckets (one collect of O(B)
+    counts) is the rank a single window gives wherever ``order`` makes
+    the order total."""
+    # the cut count sets only the local-sort parallelism (ranks stay
+    # exact at any count), while each cut adds a CASE branch: thousands
+    # of branches risk analyzer depth and janino's 64 KB method limit
+    par = df.sparkSession.sparkContext.defaultParallelism
+    n_buckets = min(max(par * 4, 16), 256)
+    k = F.col(key)
+    probs = [i / n_buckets for i in range(1, n_buckets)]
+    cuts = sorted({c for c in df.approxQuantile(key, probs, 0.001) if not math.isnan(c)})
+    # ascending position: the number of cuts strictly below the key
+    up = F.lit(0)
+    for i, c in enumerate(cuts):
+        up = F.when(k > F.lit(c), F.lit(i + 1)).otherwise(up)
+    nan_b = len(cuts) + 1
+    up = F.when(F.isnan(k), F.lit(nan_b)).otherwise(up)
+    bkt = F.lit(nan_b) - up if descending else up
+    null_b = nan_b + 1
+    with_b = df.withColumn("__bkt", F.when(k.isNull(), F.lit(null_b)).otherwise(bkt))
+    counts = {
+        int(r["__bkt"]): int(r["count"])
+        for r in with_b.groupBy("__bkt").count().collect()
+    }
+    n = sum(c for b, c in counts.items() if b != null_b)
+    offsets, acc = [], 0
+    for b in sorted(counts):
+        offsets += [F.lit(b), F.lit(acc)]
+        acc += counts[b]
+    if not offsets:
+        return with_b.withColumn("__rank", F.lit(None).cast("bigint")), 0, 0
+    k_order = k.desc_nulls_last() if descending else k.asc_nulls_last()
+    w = Window.partitionBy("__bkt").orderBy(k_order, *order)
+    rank = F.create_map(*offsets)[F.col("__bkt")].cast("bigint") + F.row_number().over(w)
+    return with_b.withColumn("__rank", rank), n, acc
+
+
+def _spark_order(x: float) -> tuple:
+    """Sort key that orders doubles as Spark does: NaN above all."""
+    return (math.isnan(x), x)
+
+
+def _running_extreme(ranked: DataFrame, value: str, agg: str) -> Column:
+    """On a frame from :func:`_range_rank`: the running ``agg`` ('min'
+    or 'max') of column ``value`` — for 'max' over every rank up to the
+    row's (Holm's prefix max), for 'min' over every rank from the row's
+    on (BH's suffix min). The running aggregate within the row's bucket
+    is combined with the same aggregate over all earlier ('max') or
+    later ('min') buckets, folded on the driver from one collect of the
+    per-bucket aggregates."""
+    lo = agg == "min"
+    fn, pick, fold = (F.min, F.least, min) if lo else (F.max, F.greatest, max)
+    w = (
+        Window.partitionBy("__bkt")
+        .orderBy(F.col("__rank").desc() if lo else F.col("__rank").asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    per = sorted(
+        (r[0], r[1])
+        for r in ranked.groupBy("__bkt").agg(fn(value)).collect()
+        if r[1] is not None
+    )
+    beyond, run = [], None
+    for b, v in reversed(per) if lo else per:
+        if run is not None:
+            beyond += [F.lit(b), F.lit(run)]
+        run = v if run is None else fold(run, v, key=_spark_order)
+    extreme = fn(value).over(w)
+    # least/greatest skip the NULL a bucket missing from the map reads
+    return pick(extreme, F.create_map(*beyond)[F.col("__bkt")]) if beyond else extreme
+
+
 def bh_adjust(
     df: DataFrame,
     p_col: str,
@@ -56,7 +183,6 @@ def bh_adjust(
     group_cols: Optional[Sequence[str]] = None,
     tiebreak_cols: Sequence[str] = (),
     allow_global: bool = False,
-    scale_safe: bool = False,
     by_correction: bool = False,
 ) -> DataFrame:
     """Benjamini-Hochberg adjusted p-values as a window computation.
@@ -66,12 +192,8 @@ def bh_adjust(
     FDR control valid under ARBITRARY dependence between the tests
     (plain BH assumes independence/PRDS); c(n) is computed in-plan as
     one more window sum over the ranked frame (the ln(n)+γ-ish factor
-    costs power, so it is opt-in). With ``scale_safe=True`` the same
-    correction rides the range-partitioned arm: c(n) is a single
-    scalar function of n, so the distributed BH decomposition carries
-    it as one driver-computed multiplier (round-12; previously
-    NotImplementedError — a 100 TB per-document correction under
-    dependence had no path).
+    costs power, so it is opt-in). On the range arm c(n) is a single
+    scalar function of n, computed on the driver (:func:`_harmonic`).
 
     BH: sort p ascending, q_i = min_{j>=i}( p_j * n / j ), clipped to 1.
     Expressed as two windows: a row_number to get the rank j, then the
@@ -81,39 +203,46 @@ def bh_adjust(
     shrinking frame (CURRENT → UNBOUNDED FOLLOWING) is re-scanned per
     row, O(n²) — 20k rows took seconds. Ties in p get identical
     adjusted values automatically — the running min in descending order
-    reaches the smaller p*n/j tied row first.
+    reaches the smaller p*n/j tied row first. NULL p-values get a NULL
+    ``out_col`` and do not count toward n.
 
-    ``group_cols`` partitions the correction (one family per group) and
-    is also the scale path: an unpartitioned window is a single-reducer
-    total order, fine for the ≤10^7-row stats frames this targets, wrong
-    for 100 TB — at that scale, partition by contrast/family. Without
-    ``group_cols`` the frame size is probed: >1M rows warns, >10M rows
-    raises unless ``allow_global=True``.
+    ``group_cols`` partitions the correction (one family per group).
+    Without it, a frame of more than ``SINGLE_REDUCER_MAX_ROWS`` rows
+    takes the range arm (module docstring) — the same values without a
+    single-reducer window. ``allow_global=True`` skips that size probe
+    and runs the window arm; callers pass it for frames that are
+    model-sized by construction (one row per gene).
 
     ``tiebreak_cols`` make the ordering total, so the rank window and
     the suffix-min frame agree on tie order — required when the output
     must be reproducible bit-for-bit across engines/runs. BH itself is
     tie-stable (tied p get equal adjusted values) either way.
-
-    ``scale_safe=True`` switches to the range-partitioned exact BH
-    (:func:`bh_adjust_scale_safe`) — same values, no single-reducer
-    window, no row ceiling: the path for per-document p-values on a
-    100 TB text corpus. Ignored when ``group_cols`` already partitions
-    the computation.
     """
-    if scale_safe and not group_cols:
-        return bh_adjust_scale_safe(
-            df,
-            p_col,
-            out_col,
-            tiebreak_cols=tiebreak_cols,
-            by_correction=by_correction,
+    range_arm = not (group_cols or allow_global) and _range_arm(df, "bh_adjust")
+    return _bh(df, p_col, out_col, group_cols, tiebreak_cols, by_correction, range_arm)
+
+
+def _bh(df, p_col, out_col, group_cols, tiebreak_cols, by_correction, range_arm):
+    """:func:`bh_adjust` on the arm the caller chose."""
+    p = F.col(p_col)
+    if range_arm:
+        ranked, n, _ = _range_rank(df, p_col, [F.col(c).asc() for c in tiebreak_cols])
+        # BY multiplies AFTER the division, in the window arm's IEEE
+        # operation order ((p·n)/j)·c; correctly rounded multiplication
+        # by a positive constant is monotone, so it commutes with the
+        # suffix min. The arms then differ only by c(n) itself, summed
+        # in a different order (ulps, far below any output rounding).
+        q = p * F.lit(float(n)) / F.col("__rank")
+        if by_correction:
+            q = q * F.lit(_harmonic(n))
+        ranked = ranked.withColumn("__bh_raw", F.when(p.isNotNull(), q))
+        fdr = F.least(_running_extreme(ranked, "__bh_raw", "min"), F.lit(1.0))
+        return ranked.withColumn(out_col, F.when(p.isNotNull(), fdr)).drop(
+            "__bh_raw", "__rank", "__bkt"
         )
     parts = list(group_cols or [])
-    if not parts:
-        _guard_unpartitioned(df, "bh_adjust", allow_global)
-    order_asc = [F.col(p_col).asc_nulls_last()] + [F.col(c).asc() for c in tiebreak_cols]
-    order_desc = [F.col(p_col).desc_nulls_first()] + [F.col(c).desc() for c in tiebreak_cols]
+    order_asc = [p.asc_nulls_last()] + [F.col(c).asc() for c in tiebreak_cols]
+    order_desc = [p.desc_nulls_first()] + [F.col(c).desc() for c in tiebreak_cols]
     w_rank = Window.partitionBy(*parts).orderBy(*order_asc)
     w_n = Window.partitionBy(*parts) if parts else Window.partitionBy(F.lit(1))
     w_runmin = (
@@ -121,8 +250,10 @@ def bh_adjust(
         .orderBy(*order_desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    n = F.count(F.when(F.col(p_col).isNotNull(), 1)).over(w_n)
+    n = F.count(F.when(p.isNotNull(), 1)).over(w_n)
     rank = F.row_number().over(w_rank)
+    # a NULL p's running min is NULL, which least() would skip
+    fdr = F.when(p.isNotNull(), F.least(F.min("__bh_raw").over(w_runmin), F.lit(1.0)))
     if by_correction:
         # c(n) = sum over ranked non-null rows of 1/rank — the rank
         # materializes first (window functions cannot nest), then one
@@ -132,25 +263,18 @@ def bh_adjust(
         staged = df.withColumn("__bh_rank", rank)
         harm = F.sum(
             F.when(
-                F.col(p_col).isNotNull(),
+                p.isNotNull(),
                 F.lit(1.0) / F.col("__bh_rank"),
             )
         ).over(w_n)
-        raw = F.col(p_col) * n / F.col("__bh_rank") * harm
+        raw = p * n / F.col("__bh_rank") * harm
         return (
             staged.withColumn("__bh_raw", raw)
-            .withColumn(
-                out_col,
-                F.least(F.min("__bh_raw").over(w_runmin), F.lit(1.0)),
-            )
+            .withColumn(out_col, fdr)
             .drop("__bh_raw", "__bh_rank")
         )
-    raw = F.col(p_col) * n / rank
-    return (
-        df.withColumn("__bh_raw", raw)
-        .withColumn(out_col, F.least(F.min("__bh_raw").over(w_runmin), F.lit(1.0)))
-        .drop("__bh_raw")
-    )
+    raw = p * n / rank
+    return df.withColumn("__bh_raw", raw).withColumn(out_col, fdr).drop("__bh_raw")
 
 
 def _harmonic(n: int) -> float:
@@ -162,8 +286,6 @@ def _harmonic(n: int) -> float:
     asymptotic H_n = ln n + γ + 1/(2n) − 1/(12n²) + 1/(120n⁴) beyond
     (remainder O(n⁻⁶) < 1e-30 at the crossover — far below double
     ulp), so a 10¹²-test corpus never loops on the driver."""
-    import math
-
     if n <= 0:
         return 0.0
     if n <= 1_000_000:
@@ -178,141 +300,6 @@ def _harmonic(n: int) -> float:
         + ninv / 2.0
         - ninv * ninv / 12.0
         + ninv ** 4 / 120.0
-    )
-
-
-def bh_adjust_scale_safe(
-    df: DataFrame,
-    p_col: str,
-    out_col: str = "fdr",
-    tiebreak_cols: Sequence[str] = (),
-    num_buckets: Optional[int] = None,
-    by_correction: bool = False,
-) -> DataFrame:
-    """EXACT Benjamini-Hochberg without a global window — the corpus-
-    scale path (e.g. per-document quality p-values over 100 TB), where
-    the single-reducer total order of :func:`bh_adjust` is impossible.
-
-    The global sort is replaced by the standard distributed sort-rank
-    decomposition:
-
-    1. bucket boundaries from approximate p-quantiles (balanced buckets
-       even when p mass concentrates near 0 — one pass);
-    2. per-bucket counts in ONE aggregation (also yields n); the B
-       cumulative offsets are computed on the driver and broadcast —
-       driver traffic is O(B) scalars, never rows;
-    3. within each bucket a PARTITIONED window gives local ranks (all
-       buckets sort in parallel); offset + local rank = exact global
-       rank j, so q' = p·n/j is exact;
-    4. the BH suffix-min factorizes: rows only need the running min
-       within their bucket (partitioned window, descending) combined
-       with the min q' over all HIGHER buckets — per-bucket minima are
-       one small aggregation, suffix-minimized on the driver and
-       broadcast back.
-
-    Values are identical to ``bh_adjust`` (asserted in
-    tests/test_stats.py at 10^6 rows): bucket assignment is monotone in
-    p, so tied p-values always share a bucket and the within-bucket
-    running min equalizes them exactly as the single window does.
-    Cost: three passes over the input (quantiles,
-    counts, the ranked transform) — at this scale recomputation beats
-    pinning the corpus in memory; persist upstream if the input is an
-    expensive subplan. Null p-values get a null ``out_col`` and do not
-    count toward n.
-
-    ``by_correction=True`` applies Benjamini-Yekutieli: q' becomes
-    p·n·c(n)/j with the harmonic factor c(n) = Σ_{i≤n} 1/i — a single
-    SCALAR function of the already-known n, computed on the driver
-    (:func:`_harmonic`) and folded into the same decomposition; the
-    suffix-min factorization is unchanged because a positive constant
-    commutes with min. Values equal the window arm's BY output
-    (asserted in tests/test_stats.py) and dominate plain BH row-wise.
-    """
-    spark = df.sparkSession
-    if num_buckets is None:
-        num_buckets = max(spark.sparkContext.defaultParallelism * 4, 16)
-
-    nn_col = df.filter(F.col(p_col).isNotNull())
-    probs = [i / num_buckets for i in range(1, num_buckets)]
-    cuts = sorted(set(nn_col.approxQuantile(p_col, probs, 0.001)))
-
-    bkt = F.lit(0)
-    for i, c in enumerate(cuts):
-        bkt = F.when(F.col(p_col) > F.lit(c), F.lit(i + 1)).otherwise(bkt)
-    bkt = F.when(F.col(p_col).isNull(), F.lit(None)).otherwise(bkt)
-
-    with_b = df.withColumn("__bh_bkt", bkt)
-    counts = {
-        int(r["__bh_bkt"]): int(r["n"])
-        for r in with_b.filter(F.col("__bh_bkt").isNotNull())
-        .groupBy("__bh_bkt")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    n_total = sum(counts.values())
-    if n_total == 0:
-        return df.withColumn(out_col, F.lit(None).cast("double"))
-    offsets, acc = {}, 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-    off_map = F.create_map(
-        *[x for b, o in offsets.items() for x in (F.lit(b), F.lit(o))]
-    )
-
-    order_asc = [F.col(p_col).asc()] + [F.col(c).asc() for c in tiebreak_cols]
-    order_desc = [F.col(p_col).desc()] + [F.col(c).desc() for c in tiebreak_cols]
-    w_rank = Window.partitionBy("__bh_bkt").orderBy(*order_asc)
-    w_runmin = (
-        Window.partitionBy("__bh_bkt")
-        .orderBy(*order_desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    grank = off_map[F.col("__bh_bkt")] + F.row_number().over(w_rank)
-    # BY multiplies AFTER the division, in the window arm's IEEE
-    # operation order ((p·n)/j)·c — correctly-rounded multiplication by
-    # a positive constant is monotone, so the suffix-min factorization
-    # below commutes with the factor. The two arms then agree up to the
-    # c(n) VALUE itself: the window arm accumulates its harmonic sum in
-    # whatever order WindowExec evaluates the running frame (an
-    # implementation detail), the scale-safe arm uses the driver-side
-    # ascending _harmonic loop — they differ only in accumulation-order
-    # ulps, far below the 6-dp output rounding grid (what the 200k-row
-    # equality test actually asserts: 1e-12 agreement). Plain BH keeps
-    # its expression byte-identical (no spurious ×1.0).
-    q_expr = F.col(p_col) * F.lit(float(n_total)) / grank
-    if by_correction:
-        q_expr = q_expr * F.lit(_harmonic(n_total))
-    ranked = with_b.withColumn(
-        "__bh_q", F.when(F.col("__bh_bkt").isNotNull(), q_expr)
-    )
-
-    bucket_mins = {
-        int(r["__bh_bkt"]): float(r["m"])
-        for r in ranked.filter(F.col("__bh_bkt").isNotNull())
-        .groupBy("__bh_bkt")
-        .agg(F.min("__bh_q").alias("m"))
-        .collect()
-    }
-    suffix, run = {}, float("inf")
-    for b in sorted(bucket_mins, reverse=True):
-        suffix[b] = run  # min strictly ABOVE bucket b
-        run = min(run, bucket_mins[b])
-    sfx_map = F.create_map(
-        *[
-            x
-            for b, v in suffix.items()
-            for x in (F.lit(b), F.lit(v if v != float("inf") else 2.0))
-        ]
-    )
-    fdr = F.least(
-        F.min("__bh_q").over(w_runmin), sfx_map[F.col("__bh_bkt")], F.lit(1.0)
-    )
-    return (
-        ranked.withColumn(
-            out_col, F.when(F.col("__bh_bkt").isNotNull(), fdr)
-        )
-        .drop("__bh_bkt", "__bh_q")
     )
 
 
@@ -345,8 +332,6 @@ def holm_adjust(
     out_col: str = "p_holm",
     group_cols: Optional[Sequence[str]] = None,
     tiebreak_cols: Sequence[str] = (),
-    allow_global: bool = False,
-    scale_safe: bool = False,
 ) -> DataFrame:
     """Holm step-down adjusted p-values — FWER control valid under
     arbitrary dependence with NO independence assumption and uniformly
@@ -362,24 +347,23 @@ def holm_adjust(
     O(n); no second descending sort at all, where BH's suffix-min
     needs one). Tied p-values get identical adjusted values (the
     running max reaches the larger multiplier first). ``group_cols``
-    partitions the family (and is the scale path); without it the
-    single-reducer guard probes the frame size like bh_adjust. NULL p
-    rows keep a NULL ``out_col`` and do not count toward n.
-    ``scale_safe=True`` switches to the range-partitioned exact Holm
-    (:func:`holm_adjust_scale_safe`) — same values, no single-reducer
-    window, no row ceiling; ignored when ``group_cols`` already
-    partitions the computation.
+    partitions the family; without it a frame of more than
+    ``SINGLE_REDUCER_MAX_ROWS`` rows takes the range arm (module
+    docstring), whose prefix max factorizes across the buckets like
+    BH's suffix min. NULL p rows keep a NULL ``out_col`` and do not
+    count toward n.
     """
-    if scale_safe and not group_cols:
-        return holm_adjust_scale_safe(
-            df, p_col, out_col, tiebreak_cols=tiebreak_cols
-        )
+    p = F.col(p_col)
     parts = list(group_cols or [])
-    if not parts:
-        _guard_unpartitioned(df, "holm_adjust", allow_global)
-    order_asc = [F.col(p_col).asc_nulls_last()] + [
-        F.col(c).asc() for c in tiebreak_cols
-    ]
+    if not parts and _range_arm(df, "holm_adjust"):
+        ranked, n, _ = _range_rank(df, p_col, [F.col(c).asc() for c in tiebreak_cols])
+        raw = F.least(p * (F.lit(n) - F.col("__rank") + 1), F.lit(1.0))
+        ranked = ranked.withColumn("__holm_raw", F.when(p.isNotNull(), raw))
+        adj = _running_extreme(ranked, "__holm_raw", "max")
+        return ranked.withColumn(out_col, F.when(p.isNotNull(), adj)).drop(
+            "__holm_raw", "__rank", "__bkt"
+        )
+    order_asc = [p.asc_nulls_last()] + [F.col(c).asc() for c in tiebreak_cols]
     w_rank = Window.partitionBy(*parts).orderBy(*order_asc)
     w_n = Window.partitionBy(*parts) if parts else Window.partitionBy(F.lit(1))
     w_runmax = (
@@ -387,133 +371,13 @@ def holm_adjust(
         .orderBy(*order_asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    n = F.count(F.when(F.col(p_col).isNotNull(), 1)).over(w_n)
+    n = F.count(F.when(p.isNotNull(), 1)).over(w_n)
     rank = F.row_number().over(w_rank)
-    raw = F.when(
-        F.col(p_col).isNotNull(),
-        F.least(F.col(p_col) * (n - rank + 1), F.lit(1.0)),
-    )
+    raw = F.when(p.isNotNull(), F.least(p * (n - rank + 1), F.lit(1.0)))
     return (
         df.withColumn("__holm_raw", raw)
-        .withColumn(
-            out_col,
-            F.when(
-                F.col(p_col).isNotNull(), F.max("__holm_raw").over(w_runmax)
-            ),
-        )
+        .withColumn(out_col, F.when(p.isNotNull(), F.max("__holm_raw").over(w_runmax)))
         .drop("__holm_raw")
-    )
-
-
-def holm_adjust_scale_safe(
-    df: DataFrame,
-    p_col: str,
-    out_col: str = "p_holm",
-    tiebreak_cols: Sequence[str] = (),
-    num_buckets: Optional[int] = None,
-) -> DataFrame:
-    """EXACT Holm step-down without a global window — the corpus-scale
-    FWER path (per-document p-values over 100 TB), completing the
-    bh_adjust_scale_safe / BY family: the step-down running MAX
-    factorizes across range buckets exactly like BH's suffix-min,
-    just in the PREFIX direction.
-
-    Same four-step decomposition as :func:`bh_adjust_scale_safe`:
-
-    1. bucket boundaries from approximate p-quantiles;
-    2. per-bucket counts in ONE aggregation (also yields n); offsets
-       on the driver, O(B) scalars;
-    3. partitioned windows give local ranks; offset + local rank =
-       exact global rank j, raw_j = min(p_j·(n − j + 1), 1) — the
-       identical clipped expression the window arm computes;
-    4. the running max factorizes: within-bucket prefix max
-       (partitioned ascending window) combined with the max raw over
-       all LOWER buckets — per-bucket maxima are one small
-       aggregation, prefix-maximized on the driver and broadcast back.
-
-    Values are identical to ``holm_adjust`` (asserted in
-    tests/test_stats.py): bucket assignment is monotone in p, ties
-    share a bucket, and correctly-rounded IEEE ops make the clipped
-    raw sequence identical, so the factorized max equals the single
-    window's. Null p-values keep a null ``out_col`` and do not count
-    toward n.
-    """
-    spark = df.sparkSession
-    if num_buckets is None:
-        num_buckets = max(spark.sparkContext.defaultParallelism * 4, 16)
-
-    nn_col = df.filter(F.col(p_col).isNotNull())
-    probs = [i / num_buckets for i in range(1, num_buckets)]
-    cuts = sorted(set(nn_col.approxQuantile(p_col, probs, 0.001)))
-
-    bkt = F.lit(0)
-    for i, c in enumerate(cuts):
-        bkt = F.when(F.col(p_col) > F.lit(c), F.lit(i + 1)).otherwise(bkt)
-    bkt = F.when(F.col(p_col).isNull(), F.lit(None)).otherwise(bkt)
-
-    with_b = df.withColumn("__hm_bkt", bkt)
-    counts = {
-        int(r["__hm_bkt"]): int(r["n"])
-        for r in with_b.filter(F.col("__hm_bkt").isNotNull())
-        .groupBy("__hm_bkt")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    n_total = sum(counts.values())
-    if n_total == 0:
-        return df.withColumn(out_col, F.lit(None).cast("double"))
-    offsets, acc = {}, 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-    off_map = F.create_map(
-        *[x for b, o in offsets.items() for x in (F.lit(b), F.lit(o))]
-    )
-
-    order_asc = [F.col(p_col).asc()] + [F.col(c).asc() for c in tiebreak_cols]
-    w_rank = Window.partitionBy("__hm_bkt").orderBy(*order_asc)
-    w_runmax = (
-        Window.partitionBy("__hm_bkt")
-        .orderBy(*order_asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    grank = off_map[F.col("__hm_bkt")] + F.row_number().over(w_rank)
-    ranked = with_b.withColumn(
-        "__hm_raw",
-        F.when(
-            F.col("__hm_bkt").isNotNull(),
-            F.least(
-                F.col(p_col) * (F.lit(n_total) - grank + 1), F.lit(1.0)
-            ),
-        ),
-    )
-
-    bucket_maxs = {
-        int(r["__hm_bkt"]): float(r["m"])
-        for r in ranked.filter(F.col("__hm_bkt").isNotNull())
-        .groupBy("__hm_bkt")
-        .agg(F.max("__hm_raw").alias("m"))
-        .collect()
-    }
-    prefix, run = {}, float("-inf")
-    for b in sorted(bucket_maxs):
-        prefix[b] = run  # max strictly BELOW bucket b
-        run = max(run, bucket_maxs[b])
-    pfx_map = F.create_map(
-        *[
-            x
-            for b, v in prefix.items()
-            for x in (F.lit(b), F.lit(v if v != float("-inf") else 0.0))
-        ]
-    )
-    adj = F.greatest(
-        F.max("__hm_raw").over(w_runmax), pfx_map[F.col("__hm_bkt")]
-    )
-    return (
-        ranked.withColumn(
-            out_col, F.when(F.col("__hm_bkt").isNotNull(), adj)
-        )
-        .drop("__hm_bkt", "__hm_raw")
     )
 
 
@@ -524,8 +388,6 @@ def storey_qvalue(
     pi0_lambda: float = 0.5,
     group_cols: Optional[Sequence[str]] = None,
     tiebreak_cols: Sequence[str] = (),
-    allow_global: bool = False,
-    scale_safe: bool = False,
 ) -> DataFrame:
     """Storey q-values: Benjamini-Hochberg rescaled by the estimated
     null proportion pi0 = #{p > lambda} / (n * (1 - lambda)), clipped
@@ -539,23 +401,18 @@ def storey_qvalue(
     Decomposition: pi0 is ONE count aggregation collapsed to three
     integers (a scalar probe — never a corpus structure), rounded to
     6 dp so both engines carry the identical multiplier; the probe's
-    total row count also serves as :func:`bh_adjust`'s single-reducer
-    guard (same thresholds, same error), so the guard's separate
-    limit-count scan is skipped — one probe, not two. The q-values
-    are then exactly ``bh_adjust(...) * pi0``. The factorization is
+    total row count also picks :func:`bh_adjust`'s arm, so no separate
+    size probe runs. The q-values are then exactly
+    ``bh_adjust(...) * pi0``. The factorization is
     legal for the same reason BY's c(n) factor is: multiplication by
     a positive constant is monotone, so it commutes with BH's
     suffix-min — and no clipping ever binds, because the suffix-min
     over j >= i always includes j = n where p_(n)*n/n = p_max <= 1,
     so q <= pi0 * p_max <= 1 unconditionally.
 
-    ``scale_safe=True`` rides :func:`bh_adjust_scale_safe`'s
-    range-partitioned arm unchanged (the pi0 probe is
-    corpus-size-free either way), so per-document q-values over
-    100 TB have the same path BH does; ``group_cols`` partitions the
-    correction per family, with pi0 still estimated GLOBALLY (the
-    qvalue-package convention — pass pre-filtered frames for
-    per-family pi0).
+    ``group_cols`` partitions the correction per family, with pi0
+    still estimated GLOBALLY (the qvalue-package convention — pass
+    pre-filtered frames for per-family pi0).
     """
     probe = df.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -565,49 +422,14 @@ def storey_qvalue(
         ).alias("n_above"),
     ).collect()[0]
     n, n_above = int(probe["n"] or 0), int(probe["n_above"] or 0)
-    n_rows = int(probe["n_rows"] or 0)
+    range_arm = not group_cols and _range_arm(df, "storey_qvalue", int(probe["n_rows"]))
     if n == 0:
         return df.withColumn(out_col, F.lit(None).cast("double")).withColumn(
             "pi0", F.lit(None).cast("double")
         )
-    # replicate _guard_unpartitioned from the EXACT count the pi0
-    # probe already paid for, then pass allow_global=True below so
-    # bh_adjust does not re-probe with a second limit-count scan
-    if not group_cols and not scale_safe and not allow_global:
-        if n_rows > SINGLE_REDUCER_MAX_ROWS:
-            raise ValueError(
-                f"storey_qvalue: unpartitioned window over "
-                f">{SINGLE_REDUCER_MAX_ROWS:,} rows serializes the whole "
-                "frame through one reducer. Pass group_cols= to partition "
-                "the computation, scale_safe=True for the range-partitioned "
-                "arm, or allow_global=True to accept the single-reducer "
-                "total order."
-            )
-        if n_rows > SINGLE_REDUCER_WARN_ROWS:
-            warnings.warn(
-                f"storey_qvalue: unpartitioned window over {n_rows:,} rows "
-                "— a single-reducer total order; pass group_cols= or "
-                "scale_safe=True.",
-                stacklevel=2,
-            )
     pi0 = n_above / (n * (1.0 - float(pi0_lambda)))
     pi0 = round(min(1.0, max(pi0, 1.0 / n)), 6)
-    adjusted = bh_adjust(
-        df,
-        p_col,
-        out_col=out_col,
-        group_cols=group_cols,
-        tiebreak_cols=tiebreak_cols,
-        allow_global=True,
-        scale_safe=scale_safe,
+    adjusted = _bh(df, p_col, out_col, group_cols, tiebreak_cols, False, range_arm)
+    return adjusted.withColumn(out_col, F.col(out_col) * F.lit(pi0)).withColumn(
+        "pi0", F.lit(pi0)
     )
-    # explicit NULL-in-NULL-out: bh_adjust's suffix-min assigns a NULL
-    # p the defensive fdr 1.0 (least() skips the NULL running min);
-    # a q-VALUE for a missing p is not meaningful, so gate on p itself
-    return adjusted.withColumn(
-        out_col,
-        F.when(
-            F.col(p_col).isNotNull() & F.col(out_col).isNotNull(),
-            F.col(out_col) * F.lit(pi0),
-        ),
-    ).withColumn("pi0", F.lit(pi0))

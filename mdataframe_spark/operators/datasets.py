@@ -17,6 +17,8 @@ from typing import Dict, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.stats import _range_arm, _range_rank
+
 # md5-prefix width used for the split hash: 8 hex chars = 32 bits is
 # plenty of resolution for split fractions and parses losslessly into
 # a BIGINT on both engines (Spark conv(); DuckDB cast('0x…')).
@@ -325,7 +327,6 @@ def balance_shards(
     weight_col: str = "n_chars",
     tiebreak_cols: Sequence[str] = ("doc_id",),
     out_col: str = "shard",
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Assign every row to one of ``n_shards`` output shards with
     near-equal total weight (token budget) per shard — the layout step
@@ -340,54 +341,28 @@ def balance_shards(
     the largest single weight (tested), and the assignment is a pure
     function of the weight order — stable across partitionings.
 
-    Scale shape: the global weight rank uses the same range-partitioned
-    decomposition as functions/stats.bh_adjust_scale_safe — bucket cuts
-    from approxQuantile, ONE count aggregation whose O(B) offsets come
-    back to the driver, then a bucket-PARTITIONED window (all buckets
-    rank in parallel; no single-reducer global window). Bucketing is
-    monotone in weight, with weight ties sharing a bucket, so
-    offset + local rank is the exact global rank.
+    Scale shape: the global weight rank is one window while the frame
+    has at most ``functions.stats.SINGLE_REDUCER_MAX_ROWS`` rows, and
+    above that the exact range-partitioned rank
+    (:func:`..functions.stats._range_rank`; no single-reducer window).
+    Both arms order NULL weights last.
 
-    ``weight_col`` must be non-null numeric. Adds ``out_col`` (int).
+    ``weight_col`` must be numeric. Adds ``out_col`` (int).
     """
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")
-    spark = df.sparkSession
-    if num_buckets is None:
-        num_buckets = max(spark.sparkContext.defaultParallelism * 4, 16)
-
-    w = F.col(weight_col).cast("double")
-    base = df.withColumn("__w", w)
-    probs = [i / num_buckets for i in range(1, num_buckets)]
-    cuts = sorted(set(base.approxQuantile("__w", probs, 0.001)))
-
-    # bucket 0 holds the LARGEST weights (descending order), and rows
-    # tied with a cut land in one bucket -> bucketing is monotone in
-    # the sort key, the exactness precondition
-    bkt = F.lit(0)
-    for i, c in enumerate(reversed(cuts)):
-        bkt = F.when(F.col("__w") < F.lit(float(c)), F.lit(i + 1)).otherwise(bkt)
-    with_b = base.withColumn("__bkt", bkt)
-
-    counts = {
-        int(r["__bkt"]): int(r["n"])
-        for r in with_b.groupBy("__bkt").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offsets, acc = {}, 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-    off_map = F.create_map(
-        *[x for b, o in offsets.items() for x in (F.lit(b), F.lit(o))]
-    )
-
-    order = [F.col("__w").desc()] + [F.col(c).asc() for c in tiebreak_cols]
-    w_rank = Window.partitionBy("__bkt").orderBy(*order)
-    g = off_map[F.col("__bkt")] + F.row_number().over(w_rank) - F.lit(1)
+    base = df.withColumn("__w", F.col(weight_col).cast("double"))
+    order = [F.col(c).asc() for c in tiebreak_cols]
+    if _range_arm(base, "balance_shards"):
+        ranked, _, _ = _range_rank(base, "__w", order, descending=True)
+        g = F.col("__rank") - F.lit(1)
+    else:
+        ranked = base
+        g = F.row_number().over(Window.orderBy(F.col("__w").desc(), *order)) - F.lit(1)
     rnd = (g / F.lit(n_shards)).cast("bigint")
     pos = g % F.lit(n_shards)
     shard = F.when(rnd % 2 == 0, pos).otherwise(F.lit(n_shards - 1) - pos)
-    return with_b.withColumn(out_col, shard.cast("int")).drop("__w", "__bkt")
+    return ranked.withColumn(out_col, shard.cast("int")).drop("__w", "__rank", "__bkt")
 
 
 # ---------------------------------------------------------------------------

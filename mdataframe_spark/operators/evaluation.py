@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import persist_tracked as _persist_tracked
+from ..functions.stats import _range_arm, _range_rank
 from .guards import DEFAULT_MAX_STEPS, probe_collapsed
 from .similarity import dot
 
@@ -395,92 +396,30 @@ def ndcg_at_k(
     )
 
 
-def _ntile_scale_safe(base, order, n_buckets, num_partitions):
-    """Exact ntile over (``__s`` desc, optional ``__tb`` asc) WITHOUT a
-    global window: approx-quantile partition cuts on the score, one
-    per-partition count aggregation (offsets broadcast as O(P)
-    scalars — driver traffic is never rows), a partitioned row_number
-    for local ranks, then Spark's ntile replayed arithmetically from
-    the exact global rank j over N rows: with q = N div n, r = N mod n,
-    buckets 1..r hold q+1 rows and buckets r+1..n hold q, so
-    bucket(j) = (j-1) div (q+1) + 1 while j ≤ r(q+1), else
-    r + (j - r(q+1) - 1) div q + 1.
+def _ntile(frame, key, order, n_buckets, range_arm):
+    """``frame`` plus ``bucket``: Spark's ``ntile(n_buckets)`` over
+    ``key`` descending (NULLs last), then the ``order`` columns.
 
-    Tied scores always share a partition (assignment depends only on
-    the score value), so the partitioned row_number equals the global
-    window's ordering wherever the caller's order is total."""
-    from ..cache import persist_tracked as _persist_tracked
-
-    # base feeds TWO driver actions (approxQuantile, the counts
-    # collect) plus the output plan — pin it so the caller's upstream
-    # corpus aggregation runs once, not three times per metric
-    base = _persist_tracked(base)
-    spark = base.sparkSession
-    if num_partitions is None:
-        # clamp: partition count here only controls local-sort
-        # parallelism (ranks stay exact at ANY count), while each cut
-        # adds a CASE branch — thousands of branches (4x parallelism on
-        # a big cluster) risk analyzer depth and janino's 64 KB method
-        # limit (the matryoshka_energy lesson)
-        num_partitions = min(
-            max(spark.sparkContext.defaultParallelism * 4, 16), 256
-        )
-    probs = [i / num_partitions for i in range(1, num_partitions)]
-    cuts = sorted(set(base.approxQuantile("__s", probs, 0.001)))
-    # ascending quantile partition: pbkt = #cuts strictly below score.
-    # NaN matches no `>` cut, which would send it to the LOWEST
-    # partition while the exact arm's DESC sort ranks NaN HIGHEST —
-    # pin NaN to the top partition so both arms agree (the documented
-    # exact==approx parity)
-    pbkt = F.lit(0)
-    for i, c in enumerate(cuts):
-        pbkt = F.when(F.col("__s") > F.lit(c), F.lit(i + 1)).otherwise(
-            pbkt
-        )
-    pbkt = F.when(F.isnan(F.col("__s")), F.lit(len(cuts))).otherwise(pbkt)
-    with_p = base.withColumn("__pbkt", pbkt)
-    counts = {
-        int(r["__pbkt"]): int(r["n"])
-        for r in with_p.groupBy("__pbkt")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    n_total = sum(counts.values())
-    if n_total == 0:
-        return with_p.drop("__pbkt").withColumn(
-            "bucket", F.lit(None).cast("int")
-        )
-    # global order is score DESC: a partition's rank offset is the row
-    # count of all HIGHER partitions
-    offsets = {}
-    acc = 0
-    for b in sorted(counts, reverse=True):
-        offsets[b] = acc
-        acc += counts[b]
-    off_map = F.create_map(
-        *[x for b, o in offsets.items() for x in (F.lit(b), F.lit(o))]
-    )
-    lw = Window.partitionBy("__pbkt").orderBy(*order)
-    j = (off_map[F.col("__pbkt")] + F.row_number().over(lw)).cast(
-        "bigint"
-    )
-    q = n_total // n_buckets
-    r = n_total % n_buckets
+    The range arm replays ntile arithmetically from the exact global
+    rank j of :func:`..functions.stats._range_rank` over N rows: with
+    q = N div n and r = N mod n, buckets 1..r hold q+1 rows and buckets
+    r+1..n hold q, so bucket(j) = (j-1) div (q+1) + 1 while
+    j <= r(q+1), else r + (j - r(q+1) - 1) div q + 1. Both arms agree
+    wherever ``order`` makes the order total."""
+    if not range_arm:
+        w = Window.orderBy(F.col(key).desc(), *order)
+        return frame.withColumn("bucket", F.ntile(n_buckets).over(w))
+    ranked, _, rows = _range_rank(frame, key, order, descending=True)
+    q, r = divmod(rows, n_buckets)
     head = r * (q + 1)
     # exact bigint `div` (never double division — ranks can exceed
     # 2^53 at corpus scale); the q==0 case never reaches the otherwise
-    # branch because then j ≤ N = r(q+1)
+    # branch because then j <= N = r(q+1)
     bucket = F.when(
-        F.col("__j") <= F.lit(head),
-        F.expr(f"(__j - 1) div {q + 1}") + 1,
-    ).otherwise(
-        F.expr(f"{r} + ((__j - {head} - 1) div {max(q, 1)})") + 1
-    )
-    return (
-        with_p.withColumn("__j", j)
-        .withColumn("bucket", bucket.cast("int"))
-        .drop("__pbkt", "__j")
-    )
+        F.col("__rank") <= F.lit(head),
+        F.expr(f"(__rank - 1) div {q + 1}") + 1,
+    ).otherwise(F.expr(f"{r} + ((__rank - {head} - 1) div {max(q, 1)})") + 1)
+    return ranked.withColumn("bucket", bucket.cast("int")).drop("__rank", "__bkt")
 
 
 def gain_deciles(
@@ -489,8 +428,6 @@ def gain_deciles(
     label_col: str,
     n_buckets: int = 10,
     tiebreak_col: str | None = None,
-    approx_buckets: bool = False,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Cumulative gain / lift table: rank by score descending, cut into
     ``n_buckets`` equal-count buckets (ntile), and report per bucket
@@ -499,24 +436,12 @@ def gain_deciles(
     top decile catch". Returns n_buckets rows: (bucket, n, n_pos,
     cum_pos, capture_rate, cum_capture_rate, lift).
 
-    Exact equal-count buckets require a TOTAL global order. Two arms:
-
-    - ``approx_buckets=False`` (default): one unpartitioned ntile
-      window — the bh_adjust discipline, fine for model-sized scored
-      frames (a classifier's eval split).
-    - ``approx_buckets=True``: the corpus-scale path (an eval split of
-      a 100 TB corpus need not be model-sized) — the same distributed
-      sort-rank decomposition as
-      :func:`mdataframe_spark.functions.stats.bh_adjust_scale_safe`:
-      partition boundaries from approx score quantiles (ties always
-      share a partition because assignment depends only on the score
-      value), per-partition counts broadcast as O(P) offsets, a
-      PARTITIONED row_number gives local ranks, offset + local rank =
-      exact global rank, and Spark's ntile is replayed arithmetically
-      from that rank (first ``N mod n`` buckets get ``ceil(N/n)``
-      rows). Values are IDENTICAL to the exact arm (asserted in
-      tests/test_evaluation.py) whenever the order is total —
-      pass ``tiebreak_col`` to make it so.
+    Exact equal-count buckets require a TOTAL global order: one
+    unpartitioned ntile window while the scored frame has at most
+    ``functions.stats.SINGLE_REDUCER_MAX_ROWS`` rows (a classifier's
+    eval split), and above that the range arm (an eval split of a
+    100 TB corpus need not be model-sized) — ntile replayed from the
+    exact range-partitioned rank, identical values (:func:`_ntile`).
 
     ``tiebreak_col`` makes the order total (cross-engine
     deterministic); rates are exact integer quotients rounded 6 dp.
@@ -529,18 +454,14 @@ def gain_deciles(
         F.col(label_col).cast("bigint").alias("__y"),
         *( [F.col(tiebreak_col).alias("__tb")] if tiebreak_col else [] ),
     )
-    order = [F.col("__s").desc()] + (
-        [F.col("__tb").asc()] if tiebreak_col else []
-    )
-    if approx_buckets:
-        bucketed = _ntile_scale_safe(
-            base, order, n_buckets, num_partitions
-        )
-    else:
-        w = Window.orderBy(*order)
-        bucketed = base.withColumn(
-            "bucket", F.ntile(n_buckets).over(w)
-        )
+    tb = [F.col("__tb").asc()] if tiebreak_col else []
+    range_arm = _range_arm(base, "gain_deciles")
+    if range_arm:
+        # base feeds two driver actions (the quantile cuts, the counts
+        # collect) plus the output plan — pin it so the caller's
+        # upstream aggregation runs once, not three times
+        base = _persist_tracked(base)
+    bucketed = _ntile(base, "__s", tb, n_buckets, range_arm)
     per = bucketed.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("__y").alias("n_pos"),

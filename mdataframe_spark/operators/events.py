@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import persist_tracked as _persist_tracked
+from ..functions.stats import _range_arm
+from .evaluation import _ntile
 
 _NS_PER_S = 1_000_000_000
 
@@ -521,9 +523,6 @@ def rfm_scores(
     ts_col: str = "ts",
     value_col: str = "value",
     n_buckets: int = 5,
-    approx_buckets: bool = True,
-    num_partitions: int | None = None,
-    small_users_max: int = 2_000_000,
 ) -> DataFrame:
     """RFM segmentation: per-user Recency (seconds since last event,
     measured from the corpus max timestamp), Frequency (event count)
@@ -536,27 +535,14 @@ def rfm_scores(
     m_score, rfm) with rfm = r·100 + f·10 + m.
 
     Scale shape: the corpus collapses in ONE partial-agged
-    groupBy(user); scoring runs on the user table. Two arms for the
-    tiling (the gain_deciles convention) — the user table genuinely
-    GROWS with the corpus (unlike eval splits), so the scale-safe arm
-    is the DEFAULT and the exact windows are the opt-in:
-
-    - ``approx_buckets=True`` (default): the corpus-scale path. The
-      persisted user table is probed ONCE (the pagerank
-      small_graph_max hybrid convention): at or below
-      ``small_users_max`` rows the tiling runs as three ntile windows
-      over the cached model-sized table (identical results, none of
-      the scale-safe arm's partition-cut jobs — measured 7× faster on
-      a 100k-user table); above it each metric is tiled by
-      :func:`..operators.evaluation._ntile_scale_safe`
-      (approx-quantile partition cuts + exact global-rank arithmetic,
-      never a global window). The ranks are exact in BOTH sub-arms,
-      so the tiles are IDENTICAL — equality-tested, and the oracle
-      replays one tiling for all arms. ``small_users_max=0`` forces
-      the distributed tiling.
-    - ``approx_buckets=False``: three unpartitioned ntile windows over
-      the user table with no size probe — the opt-in for callers who
-      know the table is tiny.
+    groupBy(user) into a persisted user table, which genuinely GROWS
+    with the corpus. One size probe of that table picks the tiling
+    (the gain_deciles convention, :func:`..operators.evaluation._ntile`):
+    at most ``functions.stats.SINGLE_REDUCER_MAX_ROWS`` users tile as
+    three ntile windows over the cached table; a larger table tiles
+    each metric from its exact range-partitioned rank, never a global
+    window. The ranks are exact on both arms, so the tiles are
+    IDENTICAL (equality-tested; the oracle replays one tiling).
     """
     d = _ns(df, ts_col)
     per_user = rfm_state(d, user_col, ts_col, value_col, _canonical=True)
@@ -570,6 +556,10 @@ def rfm_scores(
         .withColumn("monetary", F.col("monetary").cast("double"))
         .drop("last_ts", "__ref")
     )
+    # the size probe and the three tilings all read base (the
+    # corpus-collapsing per-user agg) — pin it once
+    base = _persist_tracked(base)
+    range_arm = _range_arm(base, "rfm_scores")
     # higher score = better: metric sorted best-first, tile 1 = best,
     # score = n_buckets + 1 - tile. "Best-first" = recency ASC,
     # frequency DESC, monetary DESC — expressed uniformly as DESC on
@@ -579,46 +569,13 @@ def rfm_scores(
         "f_score": F.col("frequency").cast("double"),
         "m_score": F.col("monetary").cast("double"),
     }
-    def _ntile_windows(frame):
-        o = frame
-        for name, m in metrics.items():
-            w = Window.orderBy(m.desc(), F.col(user_col).asc())
-            o = o.withColumn(
-                name,
-                (F.lit(n_buckets + 1) - F.ntile(n_buckets).over(w)).cast(
-                    "int"
-                ),
-            )
-        return o
-
-    if not approx_buckets:
-        out = _ntile_windows(base)
-    else:
-        # three tilings + the output join chain all re-derive base
-        # (the corpus-collapsing per-user agg) — pin it once; the
-        # size probe below reads the same materialization
-        base = _persist_tracked(base)
-        if small_users_max and base.count() <= small_users_max:
-            # model-sized user table: the window sub-arm over the
-            # CACHED collapse (identical tiles, no partition-cut jobs)
-            out = _ntile_windows(base)
-        else:
-            from .evaluation import _ntile_scale_safe
-
-            out = base
-            for name, m in metrics.items():
-                tiled = _ntile_scale_safe(
-                    base.select(user_col, m.alias("__s")),
-                    [F.col("__s").desc(), F.col(user_col).asc()],
-                    n_buckets,
-                    num_partitions,
-                ).select(
-                    user_col,
-                    (F.lit(n_buckets + 1) - F.col("bucket"))
-                    .cast("int")
-                    .alias(name),
-                )
-                out = out.join(tiled, user_col)
+    out = base
+    for name, m in metrics.items():
+        score = (F.lit(n_buckets + 1) - F.col("bucket")).cast("int").alias(name)
+        tiled = _ntile(
+            out.withColumn("__s", m), "__s", [F.col(user_col).asc()], n_buckets, range_arm
+        )
+        out = tiled.select(*out.columns, score)
     return out.select(
         user_col,
         "recency_s",

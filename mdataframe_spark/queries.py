@@ -3660,9 +3660,9 @@ GROUP BY lang
 def ds_shard_balance(spark, sf_dir):
     """Token-budget shard balancing (operators/datasets.py
     balance_shards): serpentine round-robin over the weight-descending
-    order, global rank computed with the range-partitioned exact-rank
-    decomposition (bucketed approxQuantile cuts + one count agg +
-    bucket-partitioned windows — no single-reducer global window)."""
+    order. The global rank is one window at this size; a frame above
+    functions/stats.py SINGLE_REDUCER_MAX_ROWS takes the exact
+    range-partitioned rank instead, with identical shards."""
     from .operators.datasets import balance_shards
 
     docs = _t(spark, sf_dir, "documents")
@@ -8199,8 +8199,9 @@ def ml_gain_deciles(spark, sf_dir):
     """Cumulative gain / lift deciles (operators/evaluation.py
     gain_deciles): events ranked by value, label = purchase — how much
     of the target the top deciles capture. Exact equal-count buckets
-    need the one unpartitioned ntile window (the bh_adjust discipline,
-    documented scale knob: pre-bucket on approx quantiles)."""
+    need a total order: one unpartitioned ntile window at this size,
+    the exact range-partitioned rank above functions/stats.py
+    SINGLE_REDUCER_MAX_ROWS (the bh_adjust cut)."""
     from .operators.evaluation import gain_deciles
 
     ev = _t(spark, sf_dir, "events").withColumn(
@@ -8554,12 +8555,13 @@ FROM agg ORDER BY bucket
 
 def e_rfm_scores(spark, sf_dir):
     """RFM segmentation (operators/events.py rfm_scores): the corpus
-    collapses in one groupBy(user); quintile scores via the DEFAULT
-    scale-safe tiling (_ntile_scale_safe — approx-quantile partition
-    cuts + exact global-rank arithmetic, no global window). The ranks
-    are exact so the tiles equal the ntile arm's (equality-tested in
-    tests/test_rfm_attribution.py), and the oracle's single ntile
-    replay covers both arms."""
+    collapses in one groupBy(user); quintile scores by three ntile
+    windows over the cached user table, which a table above
+    functions/stats.py SINGLE_REDUCER_MAX_ROWS replaces with ntile
+    replayed from the exact range-partitioned rank. The ranks are exact
+    so the tiles are equal on both arms (equality-tested in
+    tests/test_rank_arms.py), and the oracle's single ntile replay
+    covers both."""
     from .operators.events import rfm_scores
 
     ev = _events(spark, sf_dir)
@@ -11562,27 +11564,13 @@ FROM r
 
 
 def w_by_fdr_scale(spark, sf_dir):
-    """Benjamini-Yekutieli FDR through the RANGE-PARTITIONED arm
-    (functions/stats.py bh_adjust_scale_safe with by_correction,
-    round-12): the same per-part pseudo p-values as w_by_fdr, but no
-    unpartitioned window anywhere — bucketed quantile ranks carry the
-    driver-computed harmonic factor c(n) as one scalar multiplier.
-    Shares w_by_fdr's oracle: both arms produce identical values on
-    the 8-dp grid (the equality the round-11 verdict asked the
-    scale-safe arm to close)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = li.groupBy(F.col("l_partkey").alias("partkey")).agg(
-        F.round(F.avg("l_discount") * 10, 6).alias("p")
-    )
-    out = bh_adjust(
-        p,
-        "p",
-        "fdr",
-        tiebreak_cols=["partkey"],
-        by_correction=True,
-        scale_safe=True,
-    )
-    return out.select("partkey", "p", F.round("fdr", 8).alias("fdr"))
+    """w_by_fdr itself, kept under its registered name (and oracle).
+    It once forced the range-partitioned arm; bh_adjust now picks the
+    arm from the frame's size, so this per-part frame, far under
+    functions/stats.py SINGLE_REDUCER_MAX_ROWS, runs the window arm at
+    every scale factor. tests/test_rank_arms.py asserts both arms equal,
+    BY correction included."""
+    return w_by_fdr(spark, sf_dir)
 
 
 def pipe_fineweb_recipe(spark, sf_dir):

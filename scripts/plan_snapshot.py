@@ -66,13 +66,13 @@ PICKS = [
     ("sk_countmin_gate", "md5 position explode + ONE cell groupBy; broadcast cells probed; lazy scalar total"),
     ("e_seasonal_profile", "one (type, hour) partial-agged groupBy; index over the types x 24 table"),
     ("dq_candidate_keys", "one Expand-stage aggregation for every tuple count-distinct; constant unpivot"),
-    ("ml_gain_deciles", "unpartitioned ntile by necessity (exact equal-count buckets, bh_adjust discipline)"),
+    ("ml_gain_deciles", "size probe, then unpartitioned ntile (exact equal-count buckets; the range-partitioned rank only above SINGLE_REDUCER_MAX_ROWS)"),
     ("sim_embedding_drift", "two labels x dim centroid aggs; labels-bounded full-outer join; codegen dot"),
     ("dim_scd2_history_compact", "one key-partitioned window island pass + one (key, run) groupBy — single shuffle"),
     # round 9
     ("ts_acf_hourly", "ONE bucket groupBy collapses the corpus; lag join + scalar broadcast over the model-bounded series"),
     ("ts_ewma_purchases", "constant-size weight-ladder cross join (broadcast); series-membership semi join; exact-decimal products"),
-    ("e_rfm_scores", "ONE per-user partial-agged groupBy; 1-row max-ts broadcast; ntile over the user table"),
+    ("e_rfm_scores", "ONE per-user partial-agged groupBy; 1-row max-ts broadcast; size probe, then ntile over the cached user table (range-partitioned rank only above SINGLE_REDUCER_MAX_ROWS)"),
     ("e_attribution_credit", "user-key equi join with range filter; the three credit models share one (user, conversion)-partitioned window shuffle"),
     ("dq_benford", "ONE digit groupBy (≤9 rows out); 9-row spine + 1-row total broadcast"),
     ("gr_assortativity", "edge distinct + node-bounded degree agg broadcast twice; decimal moment sums in one final agg"),
@@ -103,7 +103,7 @@ PICKS = [
     ("stat_friedman", "user×type grid; per-block tie collapse; block-partitioned rank windows (no global sort)"),
     ("ts_page_hinkley", "ONE bucket collapse; ordered decimal cumsum + U/running-min windows over the series table"),
     # --- round-12 wave picks ---
-    ("w_by_fdr_scale", "range-partitioned BY: bucketed quantile ranks, partitioned windows only, driver-scalar harmonic factor"),
+    ("w_by_fdr_scale", "w_by_fdr itself: size probe, then the window arm (the range-partitioned BY runs only above SINGLE_REDUCER_MAX_ROWS)"),
     ("ts_ljung_box", "persisted bucket series shared by lag join + moments + length (InMemoryRelation, one collapse)"),
     ("gr_degree_distribution", "degree collapse -> persisted histogram; CCDF window + Hill sum histogram-bounded"),
     ("dq_format_patterns", "translate/substr class mask pure codegen; one groupBy; TakeOrderedAndProject top-k"),

@@ -352,11 +352,15 @@ def test_importance_sample_stable_under_corpus_growth(spark):
     assert all(b[k] == v for k, v in s.items())
 
 
-def test_balance_shards_matches_independent_serpentine(spark):
-    """The distributed bucketed-rank path reproduces a driver-side
-    serpentine assignment computed independently, and the max-min
-    shard load is bounded by the largest single weight."""
+def test_balance_shards_matches_independent_serpentine(spark, monkeypatch):
+    """The distributed bucketed-rank path (the range arm, forced by a
+    zero cut) reproduces a driver-side serpentine assignment computed
+    independently, and the max-min shard load is bounded by the
+    largest single weight."""
+    from mdataframe_spark.functions import stats
     from mdataframe_spark.operators.datasets import balance_shards
+
+    monkeypatch.setattr(stats, "SINGLE_REDUCER_MAX_ROWS", 0)
 
     import random
 
@@ -384,8 +388,12 @@ def test_balance_shards_matches_independent_serpentine(spark):
     assert max(loads.values()) - min(loads.values()) <= max(w for _, w in rows)
 
 
-def test_balance_shards_deterministic_across_partitionings(spark):
+def test_balance_shards_deterministic_across_partitionings(spark, monkeypatch):
+    # on the range arm (zero cut), whose buckets sort in parallel
+    from mdataframe_spark.functions import stats
     from mdataframe_spark.operators.datasets import balance_shards
+
+    monkeypatch.setattr(stats, "SINGLE_REDUCER_MAX_ROWS", 0)
 
     rows = [(i, (i * 37) % 91 + 1) for i in range(300)]
     df1 = spark.createDataFrame(rows, ["doc_id", "w"]).coalesce(1)

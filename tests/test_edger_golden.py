@@ -16,8 +16,8 @@ both; the required shrinkage ratio 0.86 matches the robust
 ProbNotOutlier mixing to two digits). fitFDistRobustly's winsorized-
 moment conventions cannot be pinned without R in the container, so the
 shipped estimator stays the documented non-robust fitFDist. Full
-analysis: scripts/locfit_hunt.py. Measured deviations on this fixture:
-p absolute < 4.4e-3 (log10 < 0.031), logFC < 1e-4, logCPM < 3e-4;
+analysis: NOTES.md, "edgeR locfit investigation". Measured deviations
+on this fixture: p absolute < 4.4e-3 (log10 < 0.031), logFC < 1e-4, logCPM < 3e-4;
 genC's p agrees to 13 significant digits because its tagwise
 dispersion pins to the same grid floor R hits.
 """

@@ -53,34 +53,16 @@ def test_rfm_score_buckets_are_balanced(spark):
         assert counts.sum() == n
 
 
-def test_rfm_exact_vs_approx_arms_identical(spark):
+def test_rfm_exact_vs_approx_arms_identical(spark, monkeypatch):
+    # the window arm and the range arm (forced by a zero cut) tile the
+    # real events table identically
+    from mdataframe_spark.functions import stats
+
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    exact = (
-        rfm_scores(ev, approx_buckets=False)
-        .toPandas()
-        .set_index("user_id")
-        .sort_index()
-    )
-    # small_users_max=0 FORCES the distributed partition-cut tiling —
-    # without it the size gate would take the window sub-arm and this
-    # test would stop covering the scale-safe path
-    approx = (
-        rfm_scores(
-            ev, approx_buckets=True, num_partitions=7, small_users_max=0
-        )
-        .toPandas()
-        .set_index("user_id")
-        .sort_index()
-    )
+    exact = rfm_scores(ev).toPandas().set_index("user_id").sort_index()
+    monkeypatch.setattr(stats, "SINGLE_REDUCER_MAX_ROWS", 0)
+    approx = rfm_scores(ev).toPandas().set_index("user_id").sort_index()
     assert exact.equals(approx)
-    # the gated sub-arm (default) must agree with both
-    gated = (
-        rfm_scores(ev)
-        .toPandas()
-        .set_index("user_id")
-        .sort_index()
-    )
-    assert exact.equals(gated)
 
 
 def test_attribution_fixture_credits(spark):

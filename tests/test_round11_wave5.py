@@ -104,10 +104,3 @@ def test_by_fdr_dominates_bh_and_matches_reference(spark):
         assert by[i] == pytest.approx(ref[i], abs=1e-9)
         # BY is uniformly more conservative than BH
         assert by[i] >= bh[i] - 1e-12
-    # round-12: the scale-safe arm carries the BY factor too (the
-    # NotImplementedError gap is closed) and matches the window arm
-    by_scale = {r["k"]: r["fdr"] for r in
-                bh_adjust(df, "p", tiebreak_cols=["k"], scale_safe=True,
-                          by_correction=True).collect()}
-    for i in range(n):
-        assert by_scale[i] == pytest.approx(by[i], abs=1e-12)

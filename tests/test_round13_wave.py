@@ -331,19 +331,6 @@ def test_ccf_keeps_empty_lag_spine_rows(spark):
     assert got[-2]["n_pairs"] == 0 and got[-2]["ccf"] is None
 
 
-def test_storey_single_probe_guard_raises_like_bh(spark, monkeypatch):
-    # the probe-reuse path must still enforce the single-reducer
-    # ceiling (tightened so the test stays hand-sized)
-    import mdataframe_spark.functions.stats as stats_mod
-
-    monkeypatch.setattr(stats_mod, "SINGLE_REDUCER_MAX_ROWS", 5)
-    df = spark.createDataFrame([(i, 0.1) for i in range(10)], "k int, p double")
-    with pytest.raises(ValueError, match="single-reducer"):
-        storey_qvalue(df, "p")
-    # allow_global opts in; scale_safe routes around the window
-    assert storey_qvalue(df, "p", allow_global=True).count() == 10
-
-
 # --- round-13 addendum pair -----------------------------------------------------
 
 def test_wilson_ci_known_interval(spark):

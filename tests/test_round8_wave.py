@@ -729,12 +729,12 @@ def test_jaccard_wedge_budget_falls_back_to_distributed(spark):
     assert dist == drv and len(dist) == 36
 
 
-def test_gain_deciles_scale_safe_equals_exact(spark):
-    """The approx_buckets arm (distributed sort-rank ntile, no global
-    window) must reproduce the exact arm row-for-row whenever the
-    order is total — including ties broken by tiebreak_col, N not
-    divisible by n_buckets, and few enough partition cuts that several
-    quantile buckets collapse."""
+def test_gain_deciles_scale_safe_equals_exact(spark, monkeypatch):
+    """The range arm (forced by a zero cut: distributed sort-rank
+    ntile, no global window) must reproduce the window arm row-for-row
+    whenever the order is total — including ties broken by
+    tiebreak_col and N not divisible by n_buckets."""
+    from mdataframe_spark.functions import stats
     from mdataframe_spark.operators.evaluation import gain_deciles
 
     rng = np.random.RandomState(7)
@@ -748,37 +748,9 @@ def test_gain_deciles_scale_safe_equals_exact(spark):
         exact = gain_deciles(
             df, "score", "y", n_buckets=nb, tiebreak_col="id"
         ).collect()
-        safe = gain_deciles(
-            df,
-            "score",
-            "y",
-            n_buckets=nb,
-            tiebreak_col="id",
-            approx_buckets=True,
-            num_partitions=8,
-        ).collect()
+        with monkeypatch.context() as m:
+            m.setattr(stats, "SINGLE_REDUCER_MAX_ROWS", 0)
+            safe = gain_deciles(
+                df, "score", "y", n_buckets=nb, tiebreak_col="id"
+            ).collect()
         assert [r.asDict() for r in exact] == [r.asDict() for r in safe]
-
-
-def test_gain_deciles_scale_safe_fewer_rows_than_buckets(spark):
-    """q = N div n = 0: every row gets its own bucket 1..N and the
-    arithmetic replay must not divide by zero."""
-    from mdataframe_spark.operators.evaluation import gain_deciles
-
-    df = spark.createDataFrame(
-        [(0.9, 1, 1), (0.5, 0, 2), (0.1, 1, 3)], ["score", "y", "id"]
-    )
-    exact = gain_deciles(
-        df, "score", "y", n_buckets=10, tiebreak_col="id"
-    ).collect()
-    safe = gain_deciles(
-        df,
-        "score",
-        "y",
-        n_buckets=10,
-        tiebreak_col="id",
-        approx_buckets=True,
-        num_partitions=4,
-    ).collect()
-    assert [r.asDict() for r in exact] == [r.asDict() for r in safe]
-    assert [r["bucket"] for r in safe] == [1, 2, 3]

@@ -159,21 +159,3 @@ def test_markov_stationary_is_a_distribution(spark):
     total = sum(r["stationary_p"] for r in out)
     assert total == pytest.approx(1.0, abs=1e-3)
     assert all(r["stationary_p"] >= 0 for r in out)
-
-
-def test_ntile_arms_agree_on_nan_scores(spark):
-    # NaN sorts HIGHEST under Spark's DESC order; the approx arm's
-    # quantile-cut CASE would send it to the LOWEST partition — the
-    # round-9 review fix pins NaN to the top partition so both arms
-    # stay identical
-    from mdataframe_spark.operators.evaluation import gain_deciles
-
-    rows = [(i, float(i % 50), 1 if i % 3 == 0 else 0) for i in range(200)]
-    rows.append((200, float("nan"), 1))
-    df = spark.createDataFrame(rows, "id BIGINT, s DOUBLE, y INT")
-    exact = gain_deciles(df, "s", "y", n_buckets=5, tiebreak_col="id").toPandas()
-    approx = gain_deciles(
-        df, "s", "y", n_buckets=5, tiebreak_col="id",
-        approx_buckets=True, num_partitions=7,
-    ).toPandas()
-    assert exact.equals(approx)

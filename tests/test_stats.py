@@ -54,9 +54,9 @@ def test_add_rank(spark):
 
 
 def test_unpartitioned_guard(spark, monkeypatch):
-    """Global windows over large frames must demand group_cols (probed
-    via a cheap limit+count; thresholds shrunk here to avoid building
-    10M-row test frames)."""
+    """add_rank, which has no range arm, demands group_cols over large
+    frames (probed via a cheap limit+count; thresholds shrunk here to
+    avoid building 10M-row test frames)."""
     import pytest
 
     from mdataframe_spark.functions import stats as stats_mod
@@ -65,103 +65,65 @@ def test_unpartitioned_guard(spark, monkeypatch):
     monkeypatch.setattr(stats_mod, "SINGLE_REDUCER_MAX_ROWS", 50)
     big = spark.range(100).selectExpr("id", "id / 100.0 AS p")
     with pytest.raises(ValueError, match="unpartitioned window"):
-        bh_adjust(big, "p", "fdr")
+        add_rank(big, "p")
     # opt-in accepts the single-reducer order
-    assert bh_adjust(big, "p", "fdr", allow_global=True).count() == 100
+    assert add_rank(big, "p", allow_global=True).count() == 100
     # partitioned path never probes
     grouped = big.withColumn("g", big.id % 4)
-    assert bh_adjust(grouped, "p", "fdr", group_cols=["g"]).count() == 100
+    assert add_rank(grouped, "p", group_cols=["g"]).count() == 100
     mid = spark.range(30).selectExpr("id", "id / 30.0 AS p")
     with pytest.warns(UserWarning, match="single-reducer"):
-        bh_adjust(mid, "p", "fdr").count()
-    with pytest.raises(ValueError, match="unpartitioned window"):
-        add_rank(big, "p")
+        add_rank(mid, "p").count()
 
 
-def test_bh_scale_safe_equals_window_path_1m(spark):
-    """bh_adjust(scale_safe=True) must reproduce the window-path BH
-    exactly at 10^6 rows — including heavy ties and p mass near 0 (the
-    realistic text-corpus shape) — with no unpartitioned window."""
+def _p_frame(spark, n, parts):
+    """n p-values: ~half tiny (signal-like) with heavy ties, the rest
+    spread over [0, 1) — the realistic text-corpus shape."""
     from pyspark.sql import functions as F
 
-    from mdataframe_spark.functions.stats import bh_adjust, bh_adjust_scale_safe
-
-    n = 1_000_000
-    df = (
+    return (
         spark.range(n)
         .withColumn(
             "p",
-            # deterministic mix: ~half tiny p (signal-like), heavy ties
             F.when(F.col("id") % 2 == 0, (F.col("id") % 1000) / 1.0e7)
             .otherwise(((F.col("id") * 2654435761) % 10000) / 10000.0),
         )
-        .repartition(32)
+        .repartition(parts)
     )
-    ref = bh_adjust(df, "p", "fdr_ref", tiebreak_cols=["id"], allow_global=True)
-    fast = bh_adjust_scale_safe(df, "p", "fdr_fast", tiebreak_cols=["id"])
+
+
+def test_bh_scale_safe_equals_window_path_1m(spark, monkeypatch):
+    """bh_adjust's range arm (forced by a zero cut) reproduces the
+    window arm exactly at 10^6 rows, with no unpartitioned window."""
+    from pyspark.sql import functions as F
+
+    from mdataframe_spark.functions import stats as stats_mod
+
+    df = _p_frame(spark, 1_000_000, 32)
+    ref = bh_adjust(df, "p", "fdr_ref", tiebreak_cols=["id"])
+    monkeypatch.setattr(stats_mod, "SINGLE_REDUCER_MAX_ROWS", 0)
+    fast = bh_adjust(df, "p", "fdr_fast", tiebreak_cols=["id"])
     joined = ref.join(fast.select("id", "fdr_fast"), "id")
     bad = joined.filter(
         F.abs(F.col("fdr_ref") - F.col("fdr_fast")) > 1e-12
     ).count()
     assert bad == 0
 
-    # dispatch through the public flag
-    via_flag = bh_adjust(df, "p", "fdr_flag", tiebreak_cols=["id"], scale_safe=True)
-    assert "fdr_flag" in via_flag.columns
 
-
-def test_bh_scale_safe_nulls_and_small(spark):
+def test_by_scale_safe_equals_window_arm_200k(spark, monkeypatch):
+    """Benjamini-Yekutieli through the range arm — identical to the
+    window arm's BY output at 200k rows with heavy ties and near-0 p
+    mass, and row-wise >= plain BH (the dominance property the
+    harmonic factor guarantees)."""
     from pyspark.sql import functions as F
 
-    from mdataframe_spark.functions.stats import bh_adjust, bh_adjust_scale_safe
+    from mdataframe_spark.functions import stats as stats_mod
 
-    rows = [(1, 0.01), (2, 0.04), (3, None), (4, 0.03), (5, 0.5), (6, 0.04)]
-    df = spark.createDataFrame(rows, ["id", "p"])
-    ref = {
-        r["id"]: r["fdr"]
-        for r in bh_adjust(df, "p", "fdr", tiebreak_cols=["id"]).collect()
-    }
-    fast = {
-        r["id"]: r["fdr"]
-        for r in bh_adjust_scale_safe(df, "p", "fdr", tiebreak_cols=["id"]).collect()
-    }
-    for k, v in ref.items():
-        if k == 3:
-            assert fast[k] is None
-        else:
-            assert abs(fast[k] - v) < 1e-12, (k, fast[k], v)
-
-
-def test_by_scale_safe_equals_window_arm_200k(spark):
-    """Round-12: Benjamini-Yekutieli through the range-partitioned arm
-    — identical to the window arm's BY output at 200k rows with heavy
-    ties and near-0 p mass, and row-wise >= plain scale-safe BH (the
-    dominance property the harmonic factor guarantees)."""
-    from pyspark.sql import functions as F
-
-    from mdataframe_spark.functions.stats import bh_adjust
-
-    n = 200_000
-    df = (
-        spark.range(n)
-        .withColumn(
-            "p",
-            F.when(F.col("id") % 2 == 0, (F.col("id") % 1000) / 1.0e7)
-            .otherwise(((F.col("id") * 2654435761) % 10000) / 10000.0),
-        )
-        .repartition(16)
-    )
-    ref = bh_adjust(
-        df, "p", "fdr_ref", tiebreak_cols=["id"],
-        by_correction=True, allow_global=True,
-    )
-    fast = bh_adjust(
-        df, "p", "fdr_fast", tiebreak_cols=["id"],
-        by_correction=True, scale_safe=True,
-    )
-    bh_fast = bh_adjust(
-        df, "p", "fdr_bh", tiebreak_cols=["id"], scale_safe=True
-    )
+    df = _p_frame(spark, 200_000, 16)
+    ref = bh_adjust(df, "p", "fdr_ref", tiebreak_cols=["id"], by_correction=True)
+    monkeypatch.setattr(stats_mod, "SINGLE_REDUCER_MAX_ROWS", 0)
+    fast = bh_adjust(df, "p", "fdr_fast", tiebreak_cols=["id"], by_correction=True)
+    bh_fast = bh_adjust(df, "p", "fdr_bh", tiebreak_cols=["id"])
     joined = (
         ref.join(fast.select("id", "fdr_fast"), "id")
         .join(bh_fast.select("id", "fdr_bh"), "id")
@@ -190,51 +152,21 @@ def test_harmonic_crossover_continuity():
     assert _harmonic(3) == 1.0 + 0.5 + 1.0 / 3.0
 
 
-def test_holm_scale_safe_equals_window_arm_200k(spark):
-    """Round-12: Holm through the range-partitioned arm — identical to
-    the window arm at 200k rows with heavy ties and near-0 p mass, and
-    the step-down monotonicity survives the bucket factorization."""
+def test_holm_scale_safe_equals_window_arm_200k(spark, monkeypatch):
+    """Holm through the range arm — identical to the window arm at 200k
+    rows with heavy ties and near-0 p mass, and the step-down
+    monotonicity survives the bucket factorization."""
     from pyspark.sql import functions as F
 
+    from mdataframe_spark.functions import stats as stats_mod
     from mdataframe_spark.functions.stats import holm_adjust
 
-    n = 200_000
-    df = (
-        spark.range(n)
-        .withColumn(
-            "p",
-            F.when(F.col("id") % 2 == 0, (F.col("id") % 1000) / 1.0e7)
-            .otherwise(((F.col("id") * 2654435761) % 10000) / 10000.0),
-        )
-        .repartition(16)
-    )
-    ref = holm_adjust(
-        df, "p", "h_ref", tiebreak_cols=["id"], allow_global=True
-    )
-    fast = holm_adjust(
-        df, "p", "h_fast", tiebreak_cols=["id"], scale_safe=True
-    )
+    df = _p_frame(spark, 200_000, 16)
+    ref = holm_adjust(df, "p", "h_ref", tiebreak_cols=["id"])
+    monkeypatch.setattr(stats_mod, "SINGLE_REDUCER_MAX_ROWS", 0)
+    fast = holm_adjust(df, "p", "h_fast", tiebreak_cols=["id"])
     joined = ref.join(fast.select("id", "h_fast"), "id")
     bad = joined.filter(
         F.abs(F.col("h_ref") - F.col("h_fast")) > 1e-12
     ).count()
     assert bad == 0
-
-
-def test_holm_scale_safe_nulls_and_small(spark):
-    from mdataframe_spark.functions.stats import (
-        holm_adjust,
-        holm_adjust_scale_safe,
-    )
-
-    rows = [(1, 0.01), (2, 0.04), (3, None), (4, 0.03), (5, 0.5)]
-    df = spark.createDataFrame(rows, ["id", "p"])
-    ref = {r["id"]: r["p_holm"] for r in
-           holm_adjust(df, "p", tiebreak_cols=["id"]).collect()}
-    fast = {r["id"]: r["p_holm"] for r in
-            holm_adjust_scale_safe(df, "p", tiebreak_cols=["id"]).collect()}
-    for k, v in ref.items():
-        if k == 3:
-            assert fast[k] is None
-        else:
-            assert abs(fast[k] - v) < 1e-12, (k, fast[k], v)
