@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..cache import persist_tracked as _persist_tracked
-from .dedup import DEFAULT_DF_CAP, cap_hot_keys
+from .dedup import DEFAULT_DF_CAP, bucket_pairs, capped_buckets
 from .graph import EdgeTable
 
 
@@ -39,10 +39,11 @@ def co_occurrence_pairs(
 
     Plan shape: one (basket, item) distinct; baskets larger than
     ``basket_cap`` are dropped with a logged warning BEFORE pairing
-    (one degenerate mega-basket would contribute cap² pairs — the same
-    guarantee as the LSH df-cap); the bucket-array pairing makes pair
-    generation ONE partial-agged shuffle. Item totals and the basket
-    count are one aggregation + one scalar probe — computed from the
+    (one degenerate mega-basket would contribute cap² pairs); the
+    capped bucket-array pairing shared with LSH
+    (:func:`~.dedup.capped_buckets`) makes pair generation ONE
+    partial-agged shuffle. Item totals and the basket count are one
+    aggregation + one scalar probe — computed from the
     CAPPED frame, so lift's denominators describe exactly the
     population that generated the pairs (denominators from the raw
     frame would systematically deflate lift the moment any basket is
@@ -60,22 +61,15 @@ def co_occurrence_pairs(
     # exchange (A/B at sf0.1: 3.4s -> 2.9s for the pair pipeline); the
     # genuinely CPU-heavy stage (bucket pairing explode) sits after the
     # groupBy shuffle and is fully parallel regardless of scan splits.
-    items = _persist_tracked(
-        df.select(
-            F.col(basket_col).alias("__b"), F.col(item_col).alias("__i")
-        ).distinct()
-    )
-    # cap BEFORE collect_set so a degenerate basket cannot grow an
-    # unbounded array in one aggregation buffer (the r5 LSH lesson);
-    # cap_hot_keys scans items twice (frequency agg + keep join) — the
-    # persisted items frame serves both
-    capped = cap_hot_keys(items, ["__b"], basket_cap, "basket")
     # ONE corpus-side shuffle: the bucket frame. n_baskets and the
-    # item totals both derive from it (explode(ms) reproduces capped's
+    # item totals both derive from it (explode(ms) reproduces the capped
     # rows exactly — the pairs are distinct, so the set IS the basket),
     # saving two more corpus-wide aggregations per call
-    buckets = capped.groupBy("__b").agg(
-        F.array_sort(F.collect_set("__i")).alias("ms")
+    buckets = capped_buckets(
+        df.select(
+            F.col(basket_col).alias("__b"), F.col(item_col).alias("__i")
+        ).distinct(),
+        "__b", F.col("__i"), basket_cap, "basket",
     )
     if with_stats:
         buckets = _persist_tracked(buckets)
@@ -84,15 +78,8 @@ def co_occurrence_pairs(
             F.explode("ms").alias("__i")
         ).groupBy("__i").agg(F.count(F.lit(1)).alias("__n"))
     pairs = (
-        buckets.filter(F.size("ms") >= 2)
-        .select(F.explode("ms").alias("item_a"), F.col("ms"))
-        .select(
-            "item_a",
-            F.explode(
-                F.filter("ms", lambda x: x > F.col("item_a"))
-            ).alias("item_b"),
-        )
-        .groupBy("item_a", "item_b")
+        bucket_pairs(buckets)
+        .groupBy(F.col("a").alias("item_a"), F.col("b").alias("item_b"))
         .agg(F.count(F.lit(1)).alias("n_co"))
         .filter(F.col("n_co") >= min_count)
     )

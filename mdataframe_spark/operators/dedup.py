@@ -3,17 +3,20 @@
 Engine extensions for training-data pipelines (the reference has no
 dedup surface; exact dedup maps to ``dropDuplicates``, SURVEY.md §2.7).
 Every operator is expressed with built-in column functions + joins so
-the heavy lifting (shingle explode, band self-join) is shuffle-parallel
+the heavy lifting (shingle explode, bucket pairing) is shuffle-parallel
 and AQE-managed. No Python UDFs anywhere in the hot path.
 
 Scale shape:
 - exact/fingerprint dedup: one groupBy on a hash — the cheapest pass.
 - MinHash/LSH: explode shingles → per-doc signature (one groupBy) →
-  band keys → self-join per band (shuffle join on band hash). The band
-  self-join is the standard sub-quadratic near-dup plan: candidates are
-  only generated within buckets.
+  (band, key) rows → capped bucket arrays (one groupBy on the key) →
+  member pairs exploded per bucket. The standard sub-quadratic near-dup
+  plan: candidates are only generated within buckets. SimHash, SRP,
+  q-gram and basket pairing share the same kernel (capped_buckets +
+  bucket_pairs).
 - SimHash: 64-bit signature from token hashes (bit-vote aggregation),
-  banding by 16-bit chunks (pigeonhole: hamming ≤ 3 ⇒ ≥1 equal chunk).
+  Manku multi-table blocks (default 4 × 16-bit chunks; pigeonhole:
+  hamming ≤ 3 ⇒ ≥1 equal chunk).
 - n-gram Jaccard: exact verification on candidate pairs via a shingle
   equi-join — used standalone on small blocks or as the LSH verify
   stage.
@@ -29,15 +32,15 @@ from pyspark.sql import functions as F
 from .graph import EdgeTable
 from .text import normalize_text
 
-# Intermediates persisted by the candidate-pair builders (banded
-# signature / shingle tables referenced by both sides of a self-join)
+# Intermediates persisted by the candidate-pair builders (keyed bucket
+# tables read by both the df-cap count and the pairing aggregation)
 # register with the engine-wide cache registry; call release_caches()
 # after the consuming action to free executor memory between pipelines.
 from ..cache import persist_tracked as _persist_tracked  # noqa: E402
 from ..cache import release_caches  # noqa: E402,F401  (re-export)
 
 
-# Document-frequency cap for candidate-generation self-joins. A bucket
+# Document-frequency cap for candidate generation. A bucket
 # with B members yields B(B-1)/2 candidate pairs; a single boilerplate
 # k-gram/band shared by 10^6 documents would create ~5*10^11 pairs in
 # one bucket — AQE skew-split spreads that work but cannot shrink the
@@ -77,6 +80,53 @@ def cap_hot_keys(df: DataFrame, key_cols, cap: int, label: str = "key") -> DataF
         )
     keep = counts.filter(F.col("__df") <= cap).select(*key_cols)
     return df.join(keep, key_cols)
+
+
+def capped_buckets(
+    df: DataFrame, key_cols, member: Column, cap: int, label: str
+) -> DataFrame:
+    """Bucket-array pairing, step 1: ``(keys…, ms)``, one row per kept
+    key, ``ms`` the sorted distinct members of that bucket.
+
+    Every capped candidate generator (LSH bands, SimHash tables, SRP
+    bands, q-grams, baskets) pairs bucket members this way: ONE
+    partial-aggregated shuffle collects each bucket's members and
+    :func:`bucket_pairs` explodes the pairs from the array — no
+    self-join, no second pass over the upstream pipeline. Hot keys are
+    dropped BEFORE the collect (count + join in :func:`cap_hot_keys`,
+    logged once per call): a degenerate bucket (millions of identical
+    docs sharing one key) must never build an unbounded array in one
+    aggregation buffer, so the cap bounds the aggregation state
+    (≤ ``cap`` members per bucket), not just the downstream explode.
+    Trade-off vs a self-join: a bucket at the cap explodes its ~cap²/2
+    pairs inside one task (a self-join + AQE skew-split would spread
+    them), bounded by cap². The keyed frame is pinned first: the cap's
+    count job and its keep-join both read it, and without the persist
+    each would re-execute the whole upstream pipeline. array_sort
+    orders a struct ``member`` by its leading field, so put the id
+    first.
+    """
+    key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+    capped = cap_hot_keys(_persist_tracked(df), key_cols, cap, label)
+    return capped.groupBy(*key_cols).agg(F.array_sort(F.collect_set(member)).alias("ms"))
+
+
+def bucket_pairs(buckets: DataFrame, id_field: Optional[str] = None) -> DataFrame:
+    """Bucket-array pairing, step 2: ``(a, b)`` for every member pair of
+    each :func:`capped_buckets` bucket, kept once as b's id > a's id
+    (``id_field`` names the id inside a struct member). A pair sharing
+    several buckets repeats; the caller applies its distinct or count."""
+    def ident(m: Column) -> Column:
+        return m if id_field is None else m[id_field]
+
+    return (
+        buckets.filter(F.size("ms") >= 2)
+        .select(F.explode("ms").alias("a"), F.col("ms"))
+        .select(
+            "a",
+            F.explode(F.filter("ms", lambda x: ident(x) > ident(F.col("a")))).alias("b"),
+        )
+    )
 
 
 # Repartition threshold for ensure_parallelism: if Catalyst's size
@@ -213,53 +263,13 @@ def lsh_candidate_pairs(
     candidate pair (id_a < id_b, distinct). Buckets with more than
     ``df_cap`` members are dropped (logged) before pairing — see
     DEFAULT_DF_CAP."""
-    rows_per_band = num_hashes // bands
-    band_struct = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"minhash_{b * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("key"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = signatures.select(
-        F.col(id_col), F.explode(band_struct).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    # bucket-array pairing: ONE partial-aggregated shuffle collects each
-    # bucket's member ids, then pairs explode from the array — no
-    # self-join, no second pass over the signature pipeline. Hot buckets
-    # are dropped BEFORE the collect_set (count + join in cap_hot_keys):
-    # a degenerate bucket (e.g. millions of identical/empty docs sharing
-    # one band key) must never materialize an unbounded array in a
-    # single aggregation buffer, so the cap bounds the AGG STATE
-    # (≤ df_cap members per bucket), not just the downstream explode.
-    # Trade-off vs the self-join: a bucket at the cap explodes its
-    # ~cap²/2 pairs inside one task (the self-join + AQE skew-split
-    # spreads them), bounded by df_cap² — with the pre-cap this shape
-    # is safe at corpus scale. Pin the banded table first: cap_hot_keys
-    # runs a count job AND feeds the keep-join, and without the persist
-    # both consumers would re-execute the whole signature pipeline.
-    banded = _persist_tracked(banded)
-    capped = cap_hot_keys(banded, ["band", "key"], df_cap, "LSH band bucket")
-    buckets = capped.groupBy("band", "key").agg(
-        F.array_sort(F.collect_set(F.col(id_col))).alias("ids")
+    buckets = capped_buckets(
+        band_table(signatures, id_col, num_hashes, bands),
+        ["band", "key"], F.col(id_col), df_cap, "LSH band bucket",
     )
     return (
-        buckets.filter(F.size("ids") >= 2)
-        .select(F.explode("ids").alias("id_a"), F.col("ids"))
-        .select(
-            "id_a",
-            F.explode(F.filter("ids", lambda x: x > F.col("id_a"))).alias("id_b"),
-        )
+        bucket_pairs(buckets)
+        .select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
         .distinct()
     )
 
@@ -307,7 +317,12 @@ def band_table(
 ) -> DataFrame:
     """(band, key, id) rows from MinHash signatures — the storable /
     joinable form of the LSH index (write bucketed by (band, key) so
-    probes co-locate)."""
+    probes co-locate). ``bands`` must divide ``num_hashes``: a band of
+    zero rows would key every document to ``md5('')``."""
+    if bands < 1 or num_hashes < bands or num_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must be >= 1 and divide num_hashes={num_hashes}"
+        )
     rows_per_band = num_hashes // bands
     band_struct = F.array(
         *[
@@ -493,75 +508,6 @@ def simhash_signatures(
     )
 
 
-def simhash_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    df_cap: int = DEFAULT_DF_CAP,
-) -> DataFrame:
-    """Near-dup candidates: any equal 16-bit chunk (pigeonhole for
-    hamming ≤ 3), verified by exact hamming over the 4 chunks. Chunk
-    buckets with more than ``df_cap`` members are dropped (logged)
-    before pairing — see DEFAULT_DF_CAP.
-
-    Scale note: 16-bit chunks give 65,536 buckets per band, so expected
-    bucket size grows as N/2^16 — beyond ~10^8 docs the AVERAGE bucket
-    approaches the cap and the 4-block pigeonhole stops scaling. That
-    is what :func:`simhash_candidate_pairs_blocked` is for: the Manku
-    et al. (WWW'07) multi-table design with wider match keys."""
-    chunk_cols = [f"simhash_c{c}" for c in range(4)]
-    member = F.struct(F.col(id_col), *[F.col(cc) for cc in chunk_cols])
-    banded = signatures.select(
-        member.alias("m"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(c).alias("band"), F.col(cc).alias("key"))
-                    for c, cc in enumerate(chunk_cols)
-                ]
-            )
-        ).alias("bk"),
-    ).select("m", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    # bucket-array pairing (same shape as lsh_candidate_pairs): ONE
-    # partial-agged shuffle collects each bucket's (id, chunks)
-    # members; pairs + the hamming verify explode from the array —
-    # no self-join, no second pass. array_sort orders structs by the
-    # leading id field, so `x.id > a.id` pairs each bucket once.
-    # Hot chunk buckets are dropped BEFORE the collect_set so a
-    # degenerate bucket never builds an unbounded struct array in one
-    # aggregation buffer — the cap bounds the agg state itself. Pinned
-    # first: cap_hot_keys' count job and the keep-join would otherwise
-    # both re-execute the signature pipeline.
-    banded = _persist_tracked(banded)
-    capped = cap_hot_keys(banded, ["band", "key"], df_cap, "SimHash chunk bucket")
-    buckets = capped.groupBy("band", "key").agg(
-        F.array_sort(F.collect_set("m")).alias("ms")
-    )
-    hamming = sum(
-        F.bit_count(
-            F.col(f"a.{cc}").bitwiseXOR(F.col(f"b.{cc}")).cast("bigint")
-        )
-        for cc in chunk_cols
-    )
-    return (
-        buckets.filter(F.size("ms") >= 2)
-        .select(F.explode("ms").alias("a"), F.col("ms"))
-        .select(
-            "a",
-            F.explode(
-                F.filter("ms", lambda x: x[id_col] > F.col("a")[id_col])
-            ).alias("b"),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            hamming.cast("bigint").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
 def _bit_slice(h1, h2, start: int, width: int):
     """Bits [start, start+width) of a 64-bit value stored as two 32-bit
     halves (h1 = bits 0-31, h2 = bits 32-63), as a bigint Column.
@@ -577,34 +523,31 @@ def _bit_slice(h1, h2, start: int, width: int):
     return lo.bitwiseOR(F.shiftleft(hi, lo_w))
 
 
-def simhash_candidate_pairs_blocked(
+def simhash_candidate_pairs(
     signatures: DataFrame,
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    n_blocks: int = 6,
+    n_blocks: int = 4,
     df_cap: int = DEFAULT_DF_CAP,
 ) -> DataFrame:
-    """SimHash candidates via the Manku et al. (WWW'07, §3) multi-table
-    block design — the corpus-scale generalization of the 4-chunk
-    pigeonhole in :func:`simhash_candidate_pairs`.
+    """SimHash near-dup pairs within Hamming distance ``max_hamming``
+    (k): candidates from the Manku et al. (WWW'07, §3) multi-table
+    block design, verified by exact Hamming over the 4 chunks. Returns
+    (id_a, id_b, hamming), id_a < id_b, distinct.
 
     The 64-bit fingerprint is split into ``n_blocks`` (m) near-equal
-    blocks. Two fingerprints within Hamming distance k differ in at
-    most k blocks, so they AGREE on some (m-k)-subset — one table per
+    blocks. Two fingerprints within distance k differ in at most k
+    blocks, so they AGREE on some (m-k)-subset — one table per
     C(m, m-k) subset, match key = that subset's concatenated bits.
-    Wider keys are the point: m=6, k=3 gives 20 tables with ~32-bit
-    keys (4 × 10^9 buckets), so the expected bucket occupancy stays
-    O(N / 2^32) instead of O(N / 2^16) — the design holds past 10^9
-    docs where the 4-block scheme drowns. The cost is the C(m, m-k)×
-    row replication of the (id, key) stream, the knob Manku's paper
-    tunes: m = k+1 degenerates to the banding scheme (k+1 tables,
-    narrow keys), larger m buys key width with replication.
-
-    Same plan shape as every candidate generator here: explode tables,
-    cap hot buckets (logged), self-join per (table, key), exact
-    Hamming verify over the 4 chunks. Candidate generation is
-    LOSSLESS for Hamming <= k (pigeonhole, not probabilistic) — the
-    property test brute-force checks recall = 1.
+    Candidate generation is therefore LOSSLESS for distance <= k
+    (pigeonhole, not probabilistic), which needs k < m. The default
+    m = 4 is the classic banding: four tables, one 16-bit chunk each.
+    Its buckets fill as N/2^16, so past ~10^8 docs the average bucket
+    nears ``df_cap``; a larger m buys key width with replication — m=6,
+    k=3 gives 20 tables with ~32-bit keys (occupancy O(N/2^32)) at the
+    cost of C(m, m-k)× rows in the (id, key) stream, the knob Manku's
+    paper tunes. Buckets with more than ``df_cap`` members are dropped
+    (logged) before pairing — see DEFAULT_DF_CAP.
     """
     from itertools import combinations
 
@@ -634,31 +577,22 @@ def simhash_candidate_pairs_blocked(
         entries.append(
             F.struct(F.lit(tid).alias("band"), key.alias("key"))
         )
-    banded = signatures.select(
-        F.col(id_col), *chunk_cols, F.explode(F.array(*entries)).alias("bk")
-    ).select(
-        id_col, *chunk_cols,
-        F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
+    keyed = signatures.select(
+        F.struct(F.col(id_col), *chunk_cols).alias("m"),
+        F.explode(F.array(*entries)).alias("bk"),
+    ).select("m", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    buckets = capped_buckets(
+        keyed, ["band", "key"], F.col("m"), df_cap, "SimHash table bucket"
     )
-    banded = _persist_tracked(banded)
-    banded = cap_hot_keys(banded, ["band", "key"], df_cap, "SimHash table bucket")
-    l, r = banded.alias("l"), banded.alias("r")
     hamming = sum(
-        F.bit_count(
-            F.col(f"l.{cc}").bitwiseXOR(F.col(f"r.{cc}")).cast("bigint")
-        )
+        F.bit_count(F.col("a")[cc].bitwiseXOR(F.col("b")[cc]).cast("bigint"))
         for cc in chunk_cols
     )
     return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
+        bucket_pairs(buckets, id_col)
         .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
+            F.col("a")[id_col].alias("id_a"),
+            F.col("b")[id_col].alias("id_b"),
             hamming.cast("bigint").alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
@@ -780,7 +714,7 @@ def embedding_near_dup_pairs(
     generation (pairs agreeing on ALL sign bits of one band's random
     hyperplanes) + exact cosine verification at ``threshold``.
 
-    Scale shape: per band one bucket equi-join — never all-pairs. A
+    Scale shape: one bucket array per (band, bucket) — never all-pairs. A
     FIXED plane count is inherently quadratic, though: r planes give
     2^r buckets per band, so bucket population — and with it pair
     volume — grows as n²/2^r no matter how large the corpus (the r5
@@ -795,10 +729,11 @@ def embedding_near_dup_pairs(
     pass explicit ints to skip it (the oracle-checked query pins 6x6
     so its SQL replay stays frozen).
 
-    Hot buckets (e.g. a spike of identical embeddings) are capped at
-    ``df_cap`` members before pairing — same logged cap_hot_keys
-    policy as the MinHash/SimHash paths; such buckets carry no dedup
-    signal and would otherwise explode the pair join.
+    Hot (band, bucket) keys (e.g. a spike of identical embeddings) are
+    capped at ``df_cap`` members before pairing — the same
+    :func:`capped_buckets` kernel as the MinHash/SimHash paths; such
+    buckets carry no dedup signal and would otherwise explode the pair
+    count.
 
     The planes are deterministic (md5-derived), so results are
     reproducible across engines and runs."""
@@ -845,31 +780,21 @@ def embedding_near_dup_pairs(
                 out[:, b] |= (acc >= 0).astype(np.int64) << p
         return pd.Series(list(out))
 
-    sig = emb.select(
+    sig = _persist_tracked(ensure_parallelism(emb.select(
         id_col, vec_col, norm_col, _srp_buckets(F.col(vec_col)).alias("__bks")
-    ).select(
-        id_col, vec_col, norm_col,
-        *[F.col("__bks")[b].alias(f"b{b}") for b in range(n_bands)],
+    )))
+    # candidate generation on (id, band, bucket) ONLY — the 64-dim
+    # vectors would otherwise ride through the bucket shuffle; the
+    # verify stage joins them back once for the deduplicated candidates
+    buckets = capped_buckets(
+        sig.select(id_col, F.posexplode("__bks").alias("band", "bucket")),
+        ["band", "bucket"], F.col(id_col), df_cap, "SRP band bucket",
     )
-    sig = _persist_tracked(ensure_parallelism(sig))
-    # candidate generation on (id, bucket) ONLY — the 64-dim vectors
-    # would otherwise ride through every band shuffle; the verify stage
-    # joins them back once for the deduplicated candidate set
-    ids = sig.select(id_col, *[f"b{b}" for b in range(n_bands)])
-    cands = None
-    for b in range(n_bands):
-        band_ids = cap_hot_keys(
-            ids.select(id_col, F.col(f"b{b}").alias("__bk")),
-            "__bk",
-            df_cap,
-            label=f"srp band {b}",
-        )
-        left = band_ids.select(F.col(id_col).alias("id_a"), "__bk")
-        right = band_ids.select(F.col(id_col).alias("id_b"), "__bk")
-        pairs = left.join(right, "__bk").filter(F.col("id_a") < F.col("id_b"))
-        pairs = pairs.select("id_a", "id_b")
-        cands = pairs if cands is None else cands.unionByName(pairs)
-    cands = cands.dropDuplicates(["id_a", "id_b"])
+    cands = (
+        bucket_pairs(buckets)
+        .select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
+        .distinct()
+    )
     va = sig.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
         F.col(norm_col).alias("na"),
@@ -1618,13 +1543,11 @@ def fuzzy_string_pairs(
     as the banded LSH recall).
 
     Plan shape: one (id, gram) explode (per-row array_distinct keeps a
-    repeated gram from double-counting a row toward the cap); hot
-    grams dropped BEFORE pairing via the logged df-cap (cap_hot_keys —
-    a stopword-like gram must never explode the pair count); the
-    bucket-array pairing of lsh_candidate_pairs (ONE partial-agged
-    shuffle, no self-join); the Levenshtein verify is a JVM-codegen
-    per-pair expression. Returns (id_a, id_b, name_a, name_b,
-    edit_distance), id_a < id_b, distinct.
+    repeated gram from double-counting a row toward the cap); the
+    capped bucket-array pairing of :func:`capped_buckets` (a
+    stopword-like gram must never explode the pair count); the
+    Levenshtein verify is a JVM-codegen per-pair expression. Returns
+    (id_a, id_b, name_a, name_b, edit_distance), id_a < id_b, distinct.
     """
     s = F.lower(F.trim(F.col(str_col)))
     base = df.select(F.col(id_col).alias("__fid"), s.alias("__fs")).filter(
@@ -1642,20 +1565,11 @@ def fuzzy_string_pairs(
             )
         ).alias("__g"),
     )
-    grams = _persist_tracked(grams)
-    capped = cap_hot_keys(grams, ["__g"], df_cap, "q-gram")
-    buckets = capped.groupBy("__g").agg(
-        F.array_sort(F.collect_set(F.struct("__fid", "__fs"))).alias("ms")
+    buckets = capped_buckets(
+        grams, "__g", F.struct("__fid", "__fs"), df_cap, "q-gram"
     )
     pairs = (
-        buckets.filter(F.size("ms") >= 2)
-        .select(F.explode("ms").alias("a"), F.col("ms"))
-        .select(
-            "a",
-            F.explode(
-                F.filter("ms", lambda x: x["__fid"] > F.col("a.__fid"))
-            ).alias("b"),
-        )
+        bucket_pairs(buckets, "__fid")
         .select(
             F.col("a.__fid").alias("id_a"),
             F.col("b.__fid").alias("id_b"),

@@ -688,40 +688,73 @@ def test_winnow_partial_overlap(spark):
     assert not (by_doc[2] & by_doc[3])
 
 
-def test_df_cap_bounds_pathological_boilerplate(spark):
+def test_df_cap_bounds_pathological_boilerplate(spark, caplog):
     """A corpus where every document is identical boilerplate: without a
-    document-frequency cap the band self-join would generate all
-    N(N-1)/2 pairs from one bucket. With the cap below N, candidate
-    generation returns ZERO pairs (the hot bucket is dropped, logged);
-    with the cap at N it returns them all — no silent truncation in
-    either direction."""
-    from mdataframe_spark.operators.dedup import (
-        cap_hot_keys,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        simhash_candidate_pairs,
-        simhash_signatures,
-    )
+    document-frequency cap the bucket pairing would generate all
+    N(N-1)/2 pairs from one bucket. With the cap below N, every capped
+    candidate generator returns ZERO pairs (the hot buckets are
+    dropped, logged once per call); with the cap at N it returns them
+    all — no silent truncation in either direction."""
+    import logging
+
+    from mdataframe_spark.operators import dedup
+    from mdataframe_spark.operators.baskets import co_occurrence_pairs
 
     n = 30
     boiler = "all work and no play makes jack a dull boy " * 4
     df = spark.createDataFrame([(i, boiler) for i in range(n)], ["doc_id", "text"])
-
-    sigs = minhash_signatures(df)
-    assert lsh_candidate_pairs(sigs, df_cap=n - 1).count() == 0
-    assert lsh_candidate_pairs(sigs, df_cap=n).count() == n * (n - 1) // 2
-
-    ssigs = simhash_signatures(df)
-    assert simhash_candidate_pairs(ssigs, df_cap=n - 1).count() == 0
-    assert simhash_candidate_pairs(ssigs, df_cap=n).count() == n * (n - 1) // 2
+    sigs = dedup.minhash_signatures(df)
+    ssigs = dedup.simhash_signatures(df)
+    emb = dedup.feature_hash_embed(df)
+    names = spark.createDataFrame([(i, "jack dull boy") for i in range(n)], ["id", "name"])
+    basket = spark.createDataFrame([(0, i) for i in range(n)], ["b", "i"])
+    generators = {
+        "lsh": lambda cap: dedup.lsh_candidate_pairs(sigs, df_cap=cap),
+        "simhash": lambda cap: dedup.simhash_candidate_pairs(ssigs, df_cap=cap),
+        "fuzzy": lambda cap: dedup.fuzzy_string_pairs(names, "id", "name", df_cap=cap),
+        "srp": lambda cap: dedup.embedding_near_dup_pairs(
+            emb, n_bands=6, n_planes=6, df_cap=cap
+        ),
+        "co_occurrence": lambda cap: co_occurrence_pairs(
+            basket, "b", "i", min_count=1, basket_cap=cap
+        ),
+    }
+    for name, pairs in generators.items():
+        for cap, want_pairs, want_warnings in ((n - 1, 0, 1), (n, n * (n - 1) // 2, 0)):
+            caplog.clear()
+            with caplog.at_level(logging.WARNING, logger=dedup.__name__):
+                got = pairs(cap).count()
+            warnings = [m for m in caplog.messages if m.startswith("cap_hot_keys:")]
+            assert got == want_pairs, (name, cap, got)
+            assert len(warnings) == want_warnings, (name, cap, warnings)
+    dedup.release_caches()
 
     # the generic utility: multi-row keys survive up to the cap exactly
     kv = spark.createDataFrame(
         [(k, i) for k in ("hot", "warm") for i in range({"hot": 5, "warm": 2}[k])],
         ["k", "i"],
     )
-    kept = cap_hot_keys(kv, "k", 2, "test key")
+    kept = dedup.cap_hot_keys(kv, "k", 2, "test key")
     assert sorted(r["k"] for r in kept.collect()) == ["warm", "warm"]
+
+
+def test_lsh_rejects_malformed_bands(spark):
+    """A band count that does not divide the signature length used to
+    leave zero rows per band, so every document keyed to md5('') and
+    paired with every other; now it is rejected up front."""
+    from mdataframe_spark.operators import dedup
+
+    df = spark.createDataFrame(
+        [(i, f"document number {i} about topic {i * 7}") for i in range(12)],
+        ["doc_id", "text"],
+    )
+    sigs = dedup.minhash_signatures(df, num_hashes=16)
+    for bands in (0, 3, 32):
+        with pytest.raises(ValueError):
+            dedup.lsh_candidate_pairs(sigs, num_hashes=16, bands=bands)
+        with pytest.raises(ValueError):
+            dedup.band_table(sigs, num_hashes=16, bands=bands)
+    assert dedup.lsh_candidate_pairs(sigs, num_hashes=16, bands=4).count() == 0
 
 
 def test_asof_join_semantics(spark):
@@ -811,16 +844,17 @@ def test_range_join_semantics(spark):
 
 
 def test_simhash_blocked_tables_lossless_recall(spark):
-    """The Manku multi-table generator (m=6, k=3) finds EXACTLY the
-    pairs within Hamming distance 3 — candidate generation is
-    pigeonhole-lossless and the verify filter is exact, so the result
-    equals a brute-force scan. Also: m = k+1 must reproduce the
-    4-chunk banding scheme's result."""
+    """The Manku multi-table generator finds EXACTLY the pairs within
+    Hamming distance k — candidate generation is pigeonhole-lossless
+    and the verify filter is exact, so the result equals a brute-force
+    scan: for m=6 at k=3 and k=4, and for the default m=4 (the 4-chunk
+    banding scheme) at k=3. k >= m would lose pairs silently, so it is
+    rejected: (0,0,0,0) and (1,1,1,1) are at distance 4 and share no
+    16-bit chunk."""
     from itertools import combinations
 
     from mdataframe_spark.operators.dedup import (
         simhash_candidate_pairs,
-        simhash_candidate_pairs_blocked,
         simhash_signatures,
     )
 
@@ -830,7 +864,12 @@ def test_simhash_blocked_tables_lossless_recall(spark):
         # overlapping word subsets -> a spread of Hamming distances
         rows.append((i, " ".join(words[j % len(words)] for j in range(i, i + 5))))
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    sigs = simhash_signatures(df)
+    sigs = simhash_signatures(df).unionByName(
+        spark.createDataFrame(
+            [(1000, 0, 0, 0, 0), (1001, 1, 1, 1, 1)],
+            "doc_id long, simhash_c0 int, simhash_c1 int, simhash_c2 int, simhash_c3 int",
+        )
+    )
 
     sig_map = {
         r["doc_id"]: (r["simhash_c0"], r["simhash_c1"], r["simhash_c2"], r["simhash_c3"])
@@ -838,33 +877,25 @@ def test_simhash_blocked_tables_lossless_recall(spark):
     }
     def hamming(a, b):
         return sum(bin(x ^ y).count("1") for x, y in zip(a, b))
-    brute = {
-        (a, b)
-        for a, b in combinations(sorted(sig_map), 2)
-        if hamming(sig_map[a], sig_map[b]) <= 3
-    }
-    assert brute, "fixture must contain near pairs"
+    def brute(k):
+        return {
+            (a, b)
+            for a, b in combinations(sorted(sig_map), 2)
+            if hamming(sig_map[a], sig_map[b]) <= k
+        }
+    def got(**kw):
+        return {
+            (r["id_a"], r["id_b"])
+            for r in simhash_candidate_pairs(sigs, **kw).collect()
+        }
+    assert brute(3), "fixture must contain near pairs"
+    assert (1000, 1001) in brute(4) - brute(3)
 
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_candidate_pairs_blocked(
-            sigs, max_hamming=3, n_blocks=6
-        ).collect()
-    }
-    assert got == brute
-
-    # degenerate m = k+1 == the 4-chunk banding scheme
-    banding = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_candidate_pairs(sigs, max_hamming=3).collect()
-    }
-    got4 = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_candidate_pairs_blocked(
-            sigs, max_hamming=3, n_blocks=4
-        ).collect()
-    }
-    assert got4 == banding == brute
+    assert got(max_hamming=3, n_blocks=6) == brute(3)
+    assert got(max_hamming=4, n_blocks=6) == brute(4)
+    assert got(max_hamming=3) == brute(3)
+    with pytest.raises(ValueError):
+        simhash_candidate_pairs(sigs, max_hamming=4)
 
 
 def test_connected_components_vs_union_find(spark):
