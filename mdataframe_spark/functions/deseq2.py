@@ -10,10 +10,11 @@ gene-wise estimate) → one-way NB GLM Wald test.
 Output-column contract matches the reference (differential.py:184-206):
 ``baseMean/log2FC/lfcSE/stat/p/FDR (name)``.
 
-Distributed shape mirrors EdgeR_Unpaired (differential.py): per-gene
-grid APL in mapInPandas; the trend is fitted from five Spark
-aggregation scalars per IRLS iteration (no per-gene collect); MAP +
-Wald run per gene in a second pass.
+Execution shape mirrors EdgeR_Unpaired (differential.py): gene-wise
+dispersions in mapInPandas; the trend and prior width are fitted on
+the driver from one collect of (gene_disp, base_mean), two float64 per
+gene (``fit_dispersion_trend_and_prior``); MAP + Wald run per gene in
+a second pass.
 
 Parity: size factors, baseMean and the Wald math are exact; the
 dispersion layer follows DESeq2's estimators but cannot be
@@ -37,8 +38,6 @@ from . import edger
 from .numerics import pnorm
 from .stats import bh_adjust
 
-GRID_LENGTH = 25
-GRID_RANGE = (-12.0, 8.0)  # dispersions 0.1 * 2^pt: ~2.4e-5 .. 25.6
 # LRT general-design grid: coarser (each point is a full GLM fit)
 LRT_GRID_LENGTH = 17
 LRT_GRID_RANGE = (-10.0, 6.0)
@@ -369,98 +368,36 @@ def _parametric_trend_numpy(gd: np.ndarray, bm: np.ndarray):
     return float(coefs[0]), float(coefs[1])
 
 
-def fit_dispersion_trend_and_prior(curves: DataFrame, df_resid: int):
+def fit_dispersion_trend_and_prior(curves: DataFrame, df_resid: int, index_column: str):
     """Parametric dispersion-mean trend + empirical-Bayes prior width
     from a DataFrame of per-gene (gene_disp, base_mean) columns.
 
-    Trend: gamma IRLS of disp ~ a0 + a1/mu — each iteration is ONE
-    Spark aggregation of five scalars (no per-gene collect). Prior
+    One Arrow collect brings the usable genes' (index, gene_disp,
+    base_mean) to the driver: two float64 plus the index per gene,
+    about 16 MB at 10^6 genes. Rows are sorted by the index, so the
+    IRLS sums do not depend on the partition order. Trend: DESeq2
+    parametricDispersionFit (``_parametric_trend_numpy``). Prior
     variance: MAD of log residuals around the trend, minus the expected
     sampling variance trigamma(df_resid/2), floored at 0.25 (DESeq2
     estimateDispersionsMAP). Returns (a0, a1, prior_var, outlier_sd);
     shared by the Wald and LRT pipelines.
     """
-    a0, a1 = 0.1, 1.0
     # DESeq2 estimateDispersionsFit: only genes with a real gene-wise
     # estimate (above 100*minDisp — minDisp-stalled genes carry no
-    # dispersion information) feed the trend
-    usable = curves.filter(
-        (F.col("gene_disp") > 100 * MIN_DISP) & (F.col("base_mean") > 0)
+    # dispersion information) feed the trend and the prior width
+    pairs = (
+        curves.filter((F.col("gene_disp") > 100 * MIN_DISP) & (F.col("base_mean") > 0))
+        .select(index_column, "gene_disp", "base_mean")
+        .toPandas()
+        .sort_values(index_column, kind="stable")
     )
-    n_usable = usable.count()
-    if n_usable <= 500_000:
-        # the gamma IRLS needs up to ~100 sequential reductions of five
-        # scalars each; for bounded gene counts one Arrow-batched
-        # toPandas (2 float64 columns, ~8 MB at the threshold — no
-        # per-Row Python object overhead) replaces ~100 scheduled jobs
-        # with identical arithmetic. The aggregation path below stays
-        # for genuinely huge gene counts.
-        pairs = usable.select("gene_disp", "base_mean").toPandas()
-        gd = pairs["gene_disp"].to_numpy(dtype=float)
-        bm = pairs["base_mean"].to_numpy(dtype=float)
-        a0, a1 = _parametric_trend_numpy(gd, bm)
-        resid = np.log(gd) - np.log(a0 + a1 / bm)
-        med = float(np.median(resid)) if len(resid) else 0.0
-        mad = float(np.median(np.abs(resid - med))) if len(resid) else 0.0
-        var_log_disp = (1.4826 * mad) ** 2
-        prior_var = max(
-            var_log_disp
-            - float(edger.trigamma(np.array([max(df_resid, 1) / 2.0]))[0]),
-            0.25,
-        )
-        outlier_sd = 2.0 * np.sqrt(max(var_log_disp, 1e-8))
-        return a0, a1, prior_var, outlier_sd
-    # parametricDispersionFit: outer loop re-selects 'good' genes whose
-    # ratio to the current fit is within (1e-4, 15); inner gamma-GLM
-    # IRLS (identity link: weighted LS with weights 1/fit^2) runs to
-    # convergence — every iteration is ONE five-scalar aggregation
-    for _outer in range(10):
-        good = usable
-        ratio = F.col("gene_disp") / (F.lit(a0) + F.lit(a1) / F.col("base_mean"))
-        good = usable.filter((ratio > 1e-4) & (ratio < 15.0))
-        ca0, ca1 = a0, a1
-        for _inner in range(50):
-            mu_fit = F.lit(ca0) + F.lit(ca1) / F.col("base_mean")
-            w = 1.0 / (mu_fit ** 2)
-            x = 1.0 / F.col("base_mean")
-            yv = F.col("gene_disp")
-            row = good.agg(
-                F.sum(w).alias("sw"),
-                F.sum(w * x).alias("swx"),
-                F.sum(w * x * x).alias("swxx"),
-                F.sum(w * yv).alias("swy"),
-                F.sum(w * x * yv).alias("swxy"),
-            ).collect()[0]
-            if row["sw"] is None:
-                break
-            det = row["sw"] * row["swxx"] - row["swx"] ** 2
-            if det == 0:
-                break
-            new_a0 = (row["swxx"] * row["swy"] - row["swx"] * row["swxy"]) / det
-            new_a1 = (row["sw"] * row["swxy"] - row["swx"] * row["swy"]) / det
-            moved = abs(new_a0 - ca0) + abs(new_a1 - ca1)
-            ca0, ca1 = max(new_a0, 1e-8), max(new_a1, 0.0)
-            if moved < 1e-10:
-                break
-        prev_a0, prev_a1 = a0, a1
-        a0, a1 = ca0, ca1
-        if (
-            np.log(max(a0, 1e-12) / max(prev_a0, 1e-12)) ** 2
-            + np.log(max(a1, 1e-12) / max(prev_a1, 1e-12)) ** 2
-        ) < 1e-6:
-            break
-
-    # prior width from genes with real estimates only (DESeq2
-    # aboveMinDisp mask in estimateDispersionsMAP)
-    resid = usable.select(
-        (F.log(F.col("gene_disp")) - F.log(F.lit(a0) + F.lit(a1) / F.col("base_mean")))
-        .alias("lr")
-    )
-    med_r = resid.agg(F.expr("percentile(lr, 0.5)").alias("m")).collect()[0]["m"]
-    mad = resid.agg(
-        F.expr(f"percentile(abs(lr - {med_r}), 0.5)").alias("mad")
-    ).collect()[0]["mad"]
-    var_log_disp = (1.4826 * float(mad)) ** 2 if mad is not None else 0.0
+    gd = pairs["gene_disp"].to_numpy(dtype=float)
+    bm = pairs["base_mean"].to_numpy(dtype=float)
+    a0, a1 = _parametric_trend_numpy(gd, bm)
+    resid = np.log(gd) - np.log(a0 + a1 / bm)
+    med = float(np.median(resid)) if len(resid) else 0.0
+    mad = float(np.median(np.abs(resid - med))) if len(resid) else 0.0
+    var_log_disp = (1.4826 * mad) ** 2
     prior_var = max(
         var_log_disp - float(edger.trigamma(np.array([max(df_resid, 1) / 2.0]))[0]),
         0.25,
@@ -566,17 +503,10 @@ class DESeq2UnpairedAB(Transformer):
         counts = persist_tracked(df.select(idx, *cols))
         group = np.array(["a"] * n_a + ["b"] * n_b + self.other_groups)
         n_groups = len(np.unique(group))
-        spline_pts = np.linspace(GRID_RANGE[0], GRID_RANGE[1], GRID_LENGTH)
-        spline_disp = 0.1 * 2.0 ** spline_pts
-        n = len(cols)
-        df_resid = n - n_groups
+        df_resid = len(cols) - n_groups
 
         # --- size factors: exact median-of-ratios, distributed ---
         sf = size_factors_distributed(counts, cols)
-
-        base_mean_expr = sum(
-            (F.col(c) / float(s) for c, s in zip(cols, sf)), F.lit(0.0)
-        ) / n
 
         schema = T.StructType(
             [
@@ -632,10 +562,10 @@ class DESeq2UnpairedAB(Transformer):
 
             curves = persist_tracked(counts.mapInPandas(phase_a, schema_a))
 
-            # --- trend + prior (shared helper: gamma-IRLS trend from
-            # five aggregation scalars per iteration, MAD prior) ---
+            # --- trend + prior (shared helper: one collect, gamma-IRLS
+            # trend and MAD prior on the driver) ---
             a0, a1, prior_var, outlier_sd = fit_dispersion_trend_and_prior(
-                curves, df_resid
+                curves, df_resid, idx
             )
 
             # --- phase B: MAP dispersion (same fixed mu) + Wald ---
@@ -688,6 +618,13 @@ class DESeq2Unpaired(DESeq2UnpairedAB):
 # general-design NB GLM + likelihood-ratio test (M5, reference
 # differential.py:407-523 wraps DESeq(test="LRT"))
 # ---------------------------------------------------------------------------
+def _linear_predictor(beta, X):
+    """Per-gene ``beta @ X.T`` as an elementwise product summed over the
+    p coefficients: BLAS gemm may round a row differently depending on
+    how many rows share the call, this does not."""
+    return (beta[:, None, :] * X[None, :, :]).sum(axis=2)
+
+
 def nb_glm_fit(y, X, offset, dispersion, max_iter=50, tol=1e-10):
     """Vectorized NB GLM IRLS over genes for a shared design matrix.
 
@@ -706,20 +643,25 @@ def nb_glm_fit(y, X, offset, dispersion, max_iter=50, tol=1e-10):
     beta = np.zeros((g, p))
     beta[:, 0] = np.log(rate)
     ridge = 1e-8 * np.eye(p)
+    # IRLS on the unconverged genes only: each gene stops at its own
+    # convergence, so its fit does not depend on the rest of the batch
+    live = np.arange(g)
     for _ in range(max_iter):
-        eta = beta @ X.T + offs
+        if len(live) == 0:
+            break
+        bl, ol = beta[live], offs[live]
+        eta = _linear_predictor(bl, X) + ol
         mu = np.exp(np.clip(eta, -300, 300))
-        w = mu / (1.0 + disp[:, None] * mu)
-        z = eta - offs + (y - mu) / np.maximum(mu, 1e-300)
+        w = mu / (1.0 + disp[live, None] * mu)
+        z = eta - ol + (y[live] - mu) / np.maximum(mu, 1e-300)
         xtw = X.T[None, :, :] * w[:, None, :]          # (g, p, n)
         xtwx = xtw @ X[None, :, :] + ridge             # (g, p, p)
         xtwz = (xtw @ z[:, :, None])[:, :, 0]          # (g, p)
         new_beta = np.linalg.solve(xtwx, xtwz)
-        step = new_beta - beta
-        beta = np.clip(new_beta, -50, 50)
-        if np.max(np.abs(step)) < tol:
-            break
-    eta = beta @ X.T + offs
+        step = np.max(np.abs(new_beta - bl), axis=1)
+        beta[live] = np.clip(new_beta, -50, 50)
+        live = live[step >= tol]
+    eta = _linear_predictor(beta, X) + offs
     mu = np.exp(np.clip(eta, -300, 300))
     ok = np.isfinite(beta).all(axis=1)
     return beta, mu, ok
@@ -891,7 +833,7 @@ class DESeq2LRT(Transformer):
 
             # --- trend + EB prior, shared with the Wald pipeline ---
             a0, a1, prior_var, outlier_sd = fit_dispersion_trend_and_prior(
-                curves, n - X_full.shape[1]
+                curves, n - X_full.shape[1], idx
             )
             l0_cols = [f"l0_{i}" for i in range(LRT_GRID_LENGTH)]
 
@@ -942,13 +884,3 @@ def _apl_curve_general(y, X, offs, pts):
         sign, logdet = np.linalg.slogdet(xtwx + 1e-12 * np.eye(X.shape[1]))
         apl[:, i] = ll - 0.5 * logdet
     return apl
-
-
-def _gene_dispersion_general(y, X, offs, grid_length=LRT_GRID_LENGTH,
-                             grid_range=LRT_GRID_RANGE):
-    """Per-gene dispersion MLE for an arbitrary design: spline argmax
-    of the Cox-Reid APL curve (batch-local)."""
-    pts = np.linspace(grid_range[0], grid_range[1], grid_length)
-    apl = _apl_curve_general(y, X, offs, pts)
-    best = edger.maximize_interpolant(pts, apl)
-    return np.maximum(0.1 * 2.0 ** best, 1e-8)

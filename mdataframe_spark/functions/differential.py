@@ -6,18 +6,20 @@ estimateDisp → exactTest → topTags) natively on Spark, with the same
 output-column contract: ``log2FC (name)``, ``logCPM (name)``,
 ``p (name)``, ``FDR (name)`` (reference: differential.py:26-48, 84-90).
 
-Distributed shape (designed for 100 TB of genes, bounded samples):
+Execution shape (phases distributed over genes, bounded samples):
 
 1. library sizes + TMM factors — distributed aggregations (norm.py),
    driver receives one scalar per sample;
-2. phase A (``applyInPandas`` over gene partitions): per-gene APL
-   curve over the 21-point dispersion grid + aveLogCPM + residual
-   deviance — each gene independent, Arrow-batched numpy kernels
-   (edger.py);
-3. global empirical-Bayes reduction — one Spark aggregation: summed
-   APL curve (common dispersion), deviance moments (prior df). A few
-   dozen doubles to the driver, broadcast back as literals;
-4. phase B (``applyInPandas``): per-gene tagwise dispersion
+2. phase A (``mapInPandas`` over gene partitions): per-gene APL
+   curve over the 21-point dispersion grid + aveLogCPM — each gene
+   independent, Arrow-batched numpy kernels (edger.py);
+3. empirical-Bayes reduction on the driver — one Arrow collect of the
+   phase-A output, sorted by the index: summed APL curve (common
+   dispersion), quantile-binned trend curves and the fitFDist prior df
+   in numpy. (22 + #samples) float64 per gene, about 0.25 GB at 10^6
+   genes with 6 samples; the trend bins and scalars go back to phase B
+   in its closure;
+4. phase B (``mapInPandas``): per-gene tagwise dispersion
    (weighted-likelihood maximize), pseudo-counts, exact NB test,
    logFC;
 5. BH/FDR — the W1 window (stats.py).
@@ -44,28 +46,8 @@ from . import edger
 from .norm import tmm_norm_factors
 from .stats import bh_adjust
 
-import logging
-
-_log = logging.getLogger(__name__)
-
 GRID_LENGTH = 21
 GRID_RANGE = (-10.0, 10.0)
-# Arrow-collect bound for the prior-df regression inputs: 3 float64
-# columns, ~12 MB at the cap — one collect replaces four sequential
-# small-aggregation jobs (the distributed path remains above it)
-PRIOR_COLLECT_CAP = 500_000
-# Arrow-collect bound for the whole phase-A output (sel + alc05 + the
-# 21-point APL grid + counts ≈ 30 float64 columns: ≤48 MB at the cap).
-# Under it, ALL between-phase EB statistics (common dispersion, trend
-# bins, prior df) run as one collect + vectorized numpy instead of four
-# sequential Spark jobs; phases A and B stay distributed either way.
-EB_COLLECT_CAP = 200_000
-# Above EB_COLLECT_CAP genes, trend-bin cuts are still computed with the
-# exact numpy quantile convention from ONE collected double column up to
-# this bound (80 MB at 10^7); only beyond it does the approx sketch take
-# over (logged) — so the fused and distributed EB branches use identical
-# bin boundaries everywhere a real genome could reach.
-ALC_EXACT_QUANTILE_CAP = 10_000_000
 
 
 class EdgeR_Unpaired(Transformer):
@@ -135,19 +117,17 @@ class EdgeR_Unpaired(Transformer):
         # --- stage 1: library sizes + TMM factors (distributed aggs) ---
         # one fused agg job: lib-size sums + the 75th percentiles TMM's
         # reference selection needs (was two separate scans)
-        n_rows = None
         if self.library_sizes is not None:
             lib = {c: float(v) for c, v in zip(cols, self.library_sizes)}
             factors = tmm_norm_factors(counts, cols, idx)
         else:
             aggs = [F.sum(c).alias(f"lib_{c}") for c in cols] + [
                 F.expr(f"percentile(`{c}`, 0.75)").alias(f"q75_{c}") for c in cols
-            ] + [F.count(F.lit(1)).alias("n_rows")]
+            ]
             row = counts.agg(*aggs).collect()[0]
             lib = {c: float(row[f"lib_{c}"]) for c in cols}
             f75 = {c: float(row[f"q75_{c}"]) / lib[c] for c in cols}
             factors = tmm_norm_factors(counts, cols, idx, lib=lib, f75=f75)
-            n_rows = int(row["n_rows"])
         eff_lib = np.array([lib[c] * factors[c] for c in cols])
         group = np.array(["a"] * n_a + ["b"] * (len(cols) - n_a))
         spline_pts = np.linspace(GRID_RANGE[0], GRID_RANGE[1], GRID_LENGTH)
@@ -191,159 +171,83 @@ class EdgeR_Unpaired(Transformer):
             # the counts columns ride along (bounded width: #samples), so
             # phase B has both the APL grid and the raw counts
             curves = persist_tracked(counts.mapInPandas(phase_a, schema_a))
-            sel_curves = curves.filter(F.col("sel"))
             l0_cols = [f"l0_{i}" for i in range(GRID_LENGTH)]
 
-            if n_rows is not None and n_rows <= EB_COLLECT_CAP:
-                # --- fused driver-side EB reduction ---
-                # ONE Arrow collect of the phase-A output (~30 float64
-                # columns/gene: ≤48 MB at the cap) materializes the
-                # persist AND feeds every between-phase statistic —
-                # replacing four sequential Spark jobs (EB sum agg,
-                # approxQuantile, trend-bin groupBy, prior-df pass) with
-                # vectorized numpy on the driver. The distributed branch
-                # below remains the path for gene counts above the cap.
-                pdf = curves.select("sel", "alc05", *l0_cols, *cols).toPandas()
-                sel_m = pdf["sel"].to_numpy(dtype=bool)
-                alc_all = pdf["alc05"].to_numpy(dtype=float)
-                l0_all = pdf[l0_cols].to_numpy(dtype=float)
-                y_all = pdf[cols].to_numpy(dtype=float)
-                alc_s, l0_s, y_s = alc_all[sel_m], l0_all[sel_m], y_all[sel_m]
-                n_genes = int(sel_m.sum())
-                sum_curve = l0_s.sum(axis=0)
-                common_pt = edger._spline_argmax(spline_pts, sum_curve)
-                common_disp = 0.1 * 2.0 ** common_pt
+            # --- between-phase EB reduction on the driver ---
+            # ONE Arrow collect of the phase-A output materializes the
+            # persist and feeds every between-phase statistic (common
+            # dispersion, trend bins, prior df) as vectorized numpy.
+            # Driver bytes per gene: (22 + #samples) float64 plus the
+            # sel flag and the index, about 0.25 GB at 10^6 genes with
+            # 6 samples. Rows are sorted by the index so the sums do
+            # not depend on the partition order of the collected rows.
+            pdf = (
+                curves.select(idx, "sel", "alc05", *l0_cols, *cols)
+                .toPandas()
+                .sort_values(idx, kind="stable")
+            )
+            sel_m = pdf["sel"].to_numpy(dtype=bool)
+            alc_s = pdf["alc05"].to_numpy(dtype=float)[sel_m]
+            l0_s = pdf[l0_cols].to_numpy(dtype=float)[sel_m]
+            y_s = pdf[cols].to_numpy(dtype=float)[sel_m]
+            n_genes = int(sel_m.sum())
+            # common dispersion: argmax of the summed APL curve. Also the
+            # dispersion at which exactTest's logCPM column is evaluated
+            # (edgeR computes aveLogCPM at the common dispersion).
+            common_pt = edger._spline_argmax(spline_pts, l0_s.sum(axis=0))
+            common_disp = 0.1 * 2.0 ** common_pt
 
-                n_bins = int(min(max(n_genes, 1), 64))
-                cuts = (
-                    np.quantile(
-                        alc_s, [i / n_bins for i in range(1, n_bins)],
-                        method="lower",
-                    )
-                    if n_bins > 1
-                    else np.array([])
+            # dispersion-trend support: quantile-bin the aveLogCPM
+            # covariate and average the APL curves per bin (the stand-in
+            # for locfit's local regression). Phase B tricube-weights the
+            # bin curves around each gene's abundance — with #bins ==
+            # #genes this IS a per-gene tricube smoother.
+            n_bins = int(min(max(n_genes, 1), 64))
+            cuts = (
+                np.quantile(
+                    alc_s, [i / n_bins for i in range(1, n_bins)], method="lower"
                 )
-                # same binning expression as the distributed branch:
-                # bin = #cuts strictly below the covariate
-                bins = np.searchsorted(np.sort(cuts), alc_s, side="left")
-                nb = int(bins.max()) + 1 if n_genes else 1
-                bin_counts = np.bincount(bins, minlength=nb).astype(float)
-                occ = bin_counts > 0
-                bin_centers = (
-                    np.bincount(bins, weights=alc_s, minlength=nb)[occ]
+                if n_bins > 1
+                else np.array([])
+            )
+            # bin = #cuts strictly below the covariate
+            bins = np.searchsorted(np.sort(cuts), alc_s, side="left")
+            nb = int(bins.max()) + 1 if n_genes else 1
+            bin_counts = np.bincount(bins, minlength=nb).astype(float)
+            occ = bin_counts > 0
+            bin_centers = (
+                np.bincount(bins, weights=alc_s, minlength=nb)[occ] / bin_counts[occ]
+            )
+            bin_curves = np.stack(
+                [
+                    np.bincount(bins, weights=l0_s[:, i], minlength=nb)[occ]
                     / bin_counts[occ]
-                )
-                bin_curves = np.stack(
-                    [
-                        np.bincount(bins, weights=l0_s[:, i], minlength=nb)[occ]
-                        / bin_counts[occ]
-                        for i in range(GRID_LENGTH)
-                    ],
-                    axis=1,
-                )
-                bin_counts = bin_counts[occ]
-                span = (
-                    1.0 if n_genes <= 50 else 0.25 + 0.75 * (50.0 / n_genes) ** 0.5
-                )
-                trend = _TrendMixer(bin_centers, bin_counts, bin_curves, span)
+                    for i in range(GRID_LENGTH)
+                ],
+                axis=1,
+            )
+            span = 1.0 if n_genes <= 50 else 0.25 + 0.75 * (50.0 / n_genes) ** 0.5
+            trend = _TrendMixer(bin_centers, bin_counts[occ], bin_curves, span)
 
-                if self.prior_df is not None:
-                    prior_df = self.prior_df
-                else:
-                    m0 = trend.mix(alc_s)
-                    trended = 0.1 * 2.0 ** edger.maximize_interpolant(
-                        np.asarray(spline_pts), m0
-                    )
-                    s2, dfres = edger.deviance_s2(
-                        y_s, group, np.log(eff_lib)[None, :], trended
-                    )
-                    ok = (dfres > 0) & (s2 > 0)
-                    d1 = dfres[ok].astype(float)
-                    e = (
-                        np.log(s2[ok])
-                        - edger.digamma(d1 / 2.0)
-                        + np.log(d1 / 2.0)
-                    )
-                    prior_df = _prior_df_from_arrays(
-                        alc_s[ok], e, edger.trigamma(d1 / 2.0)
-                    )
+            if self.prior_df is not None:
+                prior_df = self.prior_df
             else:
-                # --- global EB reduction 1: common dispersion + trend bins ---
-                agg_row = sel_curves.agg(
-                    *[F.sum(f"l0_{i}").alias(f"s{i}") for i in range(GRID_LENGTH)],
-                    F.count(F.lit(1)).alias("n_genes"),
-                ).collect()[0]
-                n_genes = agg_row["n_genes"]
-                sum_curve = np.array([agg_row[f"s{i}"] for i in range(GRID_LENGTH)])
-                # common dispersion: argmax of the summed APL curve. Also the
-                # dispersion at which exactTest's logCPM column is evaluated
-                # (edgeR computes aveLogCPM at the common dispersion).
-                common_pt = edger._spline_argmax(spline_pts, sum_curve)
-                common_disp = 0.1 * 2.0 ** common_pt
-
-                # dispersion-trend support: quantile-bin the aveLogCPM
-                # covariate and average the APL curves per bin (one groupBy;
-                # the scalable stand-in for locfit's local regression). Phase
-                # B tricube-weights the bin curves around each gene's
-                # abundance — with #bins == #genes this IS a per-gene
-                # tricube smoother.
-                n_bins = int(min(max(n_genes, 1), 64))
-                probs = [i / n_bins for i in range(1, n_bins)]
-                # exact rank-based cuts with the SAME numpy convention as
-                # the fused driver branch (np.quantile method='lower'), so
-                # crossing EB_COLLECT_CAP never changes the bin boundaries:
-                # only the single covariate column is collected (8 bytes/
-                # gene — 80 MB even at 10^7 genes, vs the ~30-column frame
-                # the fused branch collects). Beyond ALC_EXACT_QUANTILE_CAP
-                # the approx sketch takes over; that switch is logged and
-                # only moves a ~0.1% sliver of genes between 64 smoothed
-                # trend bins.
-                if n_bins <= 1:
-                    cuts = []
-                elif n_genes <= ALC_EXACT_QUANTILE_CAP:
-                    alc_vals = (
-                        sel_curves.select("alc05").toPandas()["alc05"]
-                        .to_numpy(dtype=float)
-                    )
-                    cuts = list(np.quantile(alc_vals, probs, method="lower"))
-                else:
-                    _log.warning(
-                        "EB trend bins: %d genes exceeds the exact-quantile "
-                        "cap (%d); using approxQuantile(0.001) cuts — bin "
-                        "boundaries may differ from the exact convention",
-                        n_genes, ALC_EXACT_QUANTILE_CAP,
-                    )
-                    cuts = sel_curves.approxQuantile("alc05", probs, 0.001)
-                bin_expr = F.lit(0)
-                for ci, cut in enumerate(cuts):
-                    bin_expr = F.when(F.col("alc05") > cut, ci + 1).otherwise(bin_expr)
-                bin_rows = (
-                    sel_curves.withColumn("__bin", bin_expr)
-                    .groupBy("__bin")
-                    .agg(
-                        *[F.avg(f"l0_{i}").alias(f"c{i}") for i in range(GRID_LENGTH)],
-                        F.avg("alc05").alias("center"),
-                        F.count(F.lit(1)).alias("n"),
-                    )
-                    .collect()
+                # prior df: residual deviance at the TRENDED dispersion
+                # with zero-adjusted residual df (edgeR glmFit +
+                # .residDF), then limma's fitFDist moment match with the
+                # abundance covariate
+                trended = 0.1 * 2.0 ** edger.maximize_interpolant(
+                    np.asarray(spline_pts), trend.mix(alc_s)
                 )
-                bin_centers = np.array([r["center"] for r in bin_rows])
-                bin_counts = np.array([r["n"] for r in bin_rows], dtype=float)
-                bin_curves = np.array(
-                    [[r[f"c{i}"] for i in range(GRID_LENGTH)] for r in bin_rows]
+                s2, dfres = edger.deviance_s2(
+                    y_s, group, np.log(eff_lib)[None, :], trended
                 )
-                span = (
-                    1.0 if n_genes <= 50 else 0.25 + 0.75 * (50.0 / n_genes) ** 0.5
+                ok = (dfres > 0) & (s2 > 0)
+                d1 = dfres[ok].astype(float)
+                e = np.log(s2[ok]) - edger.digamma(d1 / 2.0) + np.log(d1 / 2.0)
+                prior_df = _prior_df_from_arrays(
+                    alc_s[ok], e, edger.trigamma(d1 / 2.0)
                 )
-                trend = _TrendMixer(bin_centers, bin_counts, bin_curves, span)
-
-                if self.prior_df is not None:
-                    prior_df = self.prior_df
-                else:
-                    prior_df = _distributed_prior_df(
-                        sel_curves, cols, n_a, eff_lib, spline_pts, trend,
-                        n_genes=n_genes,
-                    )
             prior_n = prior_df / df_resid if np.isfinite(prior_df) else 1e8
 
             # --- phase B: tagwise + exact test per gene ---
@@ -357,7 +261,7 @@ class EdgeR_Unpaired(Transformer):
                 ),
                 _phase_b_schema(idx, counts.schema[idx].dataType, counts, cols),
             )
-            # curves stays persisted: the EB aggregation already
+            # curves stays persisted: the EB collect already
             # materialized it, and phase B reads it again lazily
             joined = result
         else:
@@ -414,112 +318,9 @@ class _TrendMixer:
         w = np.clip(1.0 - (d / h) ** 3, 0.0, None) ** 3
         w = np.maximum(w, 1e-8) * self.counts[None, :]
         w = w / w.sum(axis=1, keepdims=True)
-        return w @ self.curves
-
-
-def _distributed_prior_df(sel_curves, cols, n_a, eff_lib, spline_pts, trend,
-                          n_genes=None):
-    """Prior df with one extra distributed pass: per-gene residual
-    deviance at the TRENDED dispersion with zero-adjusted residual df
-    (edgeR glmFit + .residDF), then the limma fitFDist moment match
-    with the abundance covariate — the spline-detrended regression is
-    reduced to k<=4 normal-equation aggregates, so only O(k^2) doubles
-    reach the driver regardless of gene count.
-
-    Below ``PRIOR_COLLECT_CAP`` genes the (alc05, e, trig) triples are
-    collected ONCE via Arrow and the regression runs in numpy (sorted
-    for order-determinism) — one Spark job instead of four sequential
-    small-aggregation jobs, identical arithmetic. The aggregation path
-    below stays for genuinely huge gene counts."""
-    group = np.array(["a"] * n_a + ["b"] * (len(cols) - n_a))
-    l0_cols = [f"l0_{i}" for i in range(len(spline_pts))]
-    pts = np.asarray(spline_pts)
-
-    schema = T.StructType(
-        [
-            T.StructField("alc05", T.DoubleType()),
-            T.StructField("e", T.DoubleType()),
-            T.StructField("trig", T.DoubleType()),
-        ]
-    )
-
-    def s2_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            y = pdf[cols].to_numpy(dtype=float)
-            alc = pdf["alc05"].to_numpy(dtype=float)
-            l0 = pdf[l0_cols].to_numpy(dtype=float)
-            m0 = trend.mix(alc)
-            trended = 0.1 * 2.0 ** edger.maximize_interpolant(pts, m0)
-            s2, dfres = edger.deviance_s2(
-                y, group, np.log(eff_lib)[None, :], trended
-            )
-            ok = (dfres > 0) & (s2 > 0)
-            d1 = dfres[ok].astype(float)
-            e = (
-                np.log(s2[ok])
-                - edger.digamma(d1 / 2.0)
-                + np.log(d1 / 2.0)
-            )
-            yield pd.DataFrame(
-                {
-                    "alc05": alc[ok],
-                    "e": e,
-                    "trig": edger.trigamma(d1 / 2.0),
-                }
-            )
-
-    ez_plan = sel_curves.mapInPandas(s2_pass, schema)
-
-    if n_genes is not None and n_genes <= PRIOR_COLLECT_CAP:
-        pdf = ez_plan.toPandas()
-        return _prior_df_from_arrays(
-            pdf["alc05"].to_numpy(dtype=float),
-            pdf["e"].to_numpy(dtype=float),
-            pdf["trig"].to_numpy(dtype=float),
-        )
-
-    from ..cache import persist_tracked as _pt
-
-    ez = _pt(ez_plan)
-    n_ok = ez.count()
-    if n_ok < 2:
-        return np.inf
-    df_spline = edger.spline_basis_df(n_ok)
-    interior = max(df_spline - 2, 0)
-    if interior > 0:
-        probs = list(np.linspace(0, 1, interior + 2)[1:-1])
-        iq = ez.approxQuantile("alc05", probs, 0.001)
-        bounds = ez.agg(
-            F.min("alc05").alias("lo"), F.max("alc05").alias("hi")
-        ).collect()[0]
-        knots = sorted(iq + [bounds["lo"], bounds["hi"]])
-    else:
-        knots = []
-    basis = _ns_basis_exprs("alc05", knots, df_spline)
-    k = len(basis)
-    aggs = []
-    for i in range(k):
-        for j in range(i, k):
-            aggs.append(F.sum(basis[i] * basis[j]).alias(f"xx_{i}_{j}"))
-        aggs.append(F.sum(basis[i] * F.col("e")).alias(f"xe_{i}"))
-    aggs.append(F.sum(F.col("e") * F.col("e")).alias("ee"))
-    aggs.append(F.avg("trig").alias("mean_trig"))
-    row = ez.agg(*aggs).collect()[0]
-    XtX = np.empty((k, k))
-    Xte = np.empty(k)
-    for i in range(k):
-        for j in range(i, k):
-            XtX[i, j] = XtX[j, i] = row[f"xx_{i}_{j}"]
-        Xte[i] = row[f"xe_{i}"]
-    rank = np.linalg.matrix_rank(XtX)
-    coef = np.linalg.pinv(XtX) @ Xte
-    rss = max(row["ee"] - coef @ Xte, 0.0)
-    if n_ok - rank <= 0:
-        return np.inf
-    evar = rss / (n_ok - rank) - row["mean_trig"]
-    if evar <= 0:
-        return np.inf
-    return 2.0 * float(edger.trigamma_inverse(np.array([evar]))[0])
+        # elementwise, not ``w @ curves``: a BLAS gemm may round a row
+        # differently depending on how many rows share the call
+        return (w[:, :, None] * self.curves[None, :, :]).sum(axis=1)
 
 
 def _prior_df_from_arrays(alc, e, trig):
@@ -545,28 +346,6 @@ def _prior_df_from_arrays(alc, e, trig):
     if evar <= 0:
         return np.inf
     return 2.0 * float(edger.trigamma_inverse(np.array([evar]))[0])
-
-
-def _ns_basis_exprs(col, knots, df):
-    """Column expressions mirroring edger.natural_spline_basis: {1, x}
-    plus truncated-power natural-spline terms for df > 2."""
-    x = F.col(col)
-    exprs = [F.lit(1.0), x]
-    if df <= 2 or len(knots) < 3:
-        return exprs[: max(df, 1)]
-    k_last = knots[-1]
-    k_prev = knots[-2]
-
-    def d(kn):
-        return (
-            F.pow(F.greatest(x - F.lit(kn), F.lit(0.0)), 3)
-            - F.pow(F.greatest(x - F.lit(k_last), F.lit(0.0)), 3)
-        ) / F.lit(k_last - kn)
-
-    d_prev = d(k_prev)
-    for kn in knots[:-2]:
-        exprs.append(d(kn) - d_prev)
-    return exprs
 
 
 def _phase_b_schema(idx, idx_type, counts, cols):

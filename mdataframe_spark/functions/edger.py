@@ -582,6 +582,14 @@ def equalize_lib_sizes(
 BINOM_BIG_TOTAL = 10_000
 
 
+def _padded_row_sums(m: np.ndarray) -> np.ndarray:
+    """Row sums of a zero-padded chunk, added left to right. The padded
+    width is the chunk's longest row, so numpy's pairwise ``sum`` would
+    group a row's terms by which genes share its chunk; the running sum
+    gives each gene the same value in any batch."""
+    return np.cumsum(m, axis=1)[:, -1]
+
+
 def binom_test(s1: np.ndarray, s2: np.ndarray, p: float) -> np.ndarray:
     """Exact two-sided binomial split test (edgeR binomTest shape):
     given the total n = s1+s2 split with success prob p, sum the
@@ -631,7 +639,9 @@ def binom_test(s1: np.ndarray, s2: np.ndarray, p: float) -> np.ndarray:
         d = np.exp(logp)
         obs = d[np.arange(len(ii)), s1[ii].astype(int)]
         dominated = np.where(d <= obs[:, None] * (1 + 1e-8), d, 0.0)
-        out[ii] = np.minimum(dominated.sum(axis=1) / d.sum(axis=1), 1.0)
+        out[ii] = np.minimum(
+            _padded_row_sums(dominated) / _padded_row_sums(d), 1.0
+        )
     return out
 
 
@@ -725,7 +735,7 @@ def exact_test_doubletail(
             logp = dnbinom_log(j, r1, m1) + dnbinom_log(si - j, r2, m2)
             logpbot = dnbinom_log(s[ii], ntot / phi[ii], s[ii])[:, None]
             contrib = np.where(valid, np.exp(logp - logpbot), 0.0)
-            pvals[ii] = np.minimum(2.0 * contrib.sum(axis=1), 1.0)
+            pvals[ii] = np.minimum(2.0 * _padded_row_sums(contrib), 1.0)
 
     if len(left):
         tail_sums(left, (s1 + 1).astype(int), True)

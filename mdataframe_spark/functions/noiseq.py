@@ -17,24 +17,21 @@ published scheme (nss replicates of size pnr·total with uniform
 variability v, M-D noise from within-condition replicate pairs) with a
 seeded numpy generator — prob is asserted within sampling tolerance.
 
-Scale shape: M/D/rank are pure column expressions (two scan columns +
-two scalar factors). The noise cloud is built per gene partition with
-mapInPandas (deterministic per-gene seeds); prob compares each gene's
-(|M|,|D|) against the GLOBAL cloud — exact when the cloud is small
-(collected + broadcast), 2-D-histogram approximated beyond
-``max_exact_noise`` points.
+Execution shape: M/D/rank are pure column expressions (two scan
+columns + two scalar factors). Prob needs the whole count vector (the
+multinomial couples all genes of a sample): the two count columns are
+collected, the noise cloud is simulated on the driver, each gene's
+(|M|, |D|) is counted against the whole cloud exactly, and the
+per-gene probs are broadcast-joined back.
 """
 
 from __future__ import annotations
 
-import hashlib
-from typing import Collection, Dict, Iterator, Optional
+from typing import Collection, Dict, Optional
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..cache import persist_tracked
 from ..transformer import Transformer
@@ -106,7 +103,6 @@ class NOISeq(Transformer):
         self.nss = parameters.get("nss", 5)
         self.v = parameters.get("v", 0.02)
         self.seed = parameters.get("seed", 42)
-        self.max_exact_noise = parameters.get("max_exact_noise", 2_000_000)
         self.compute_prob = parameters.get("compute_prob", True)
         self.suffix = f" ({comparison_name})" if comparison_name else f" ({self.name})"
 
@@ -167,42 +163,30 @@ class NOISeq(Transformer):
             F.abs(na - nb).alias("__d"),
         )
 
-        # noise cloud. The multinomial couples all genes of a sample, so
-        # the exact simulation needs the whole count vector: below the
-        # cap, collect the two columns (a few MB for real gene counts)
-        # and simulate exactly; above it, approximate with independent
-        # per-gene binomials (the multinomial marginals — the coupling
-        # is O(p_g) and negligible for large totals), distributed.
         if not self.compute_prob:
             # M/D/Rank are closed-form; callers that don't need Prob
             # (e.g. the hash-checked deterministic layer) skip the
             # whole noise-cloud simulation
             out = signal.withColumn("__prob", F.lit(None).cast("double"))
             return self._finalize(out, idx, ca, cb)
-        # one Arrow collect decides the exact-vs-approximate branch AND
-        # feeds the exact simulation (was a separate count() job);
-        # max_exact_noise bounds the driver memory either way
-        pair_pdf = None
-        n_genes = pair.limit(self.max_exact_noise + 1).count()
-        if n_genes <= self.max_exact_noise:
-            pair_pdf = pair.select(idx, ca, cb).toPandas()
-            y = pair_pdf[[ca, cb]].to_numpy(dtype=float)
-            nm, nd = self._simulate_noise(y, lib, scale)
-            am_order = np.argsort(nm)
-            nm_sorted, nd_by_m = nm[am_order], nd[am_order]
-            total = len(nm_sorted)
-            sig_pdf = signal.select(idx, "__m", "__d").toPandas()
-            am = np.abs(sig_pdf["__m"].to_numpy(dtype=float))
-            ad = np.abs(sig_pdf["__d"].to_numpy(dtype=float))
-            dom = _dominance_counts(nm_sorted, nd_by_m, am, ad)
-            sig_pdf["__prob"] = dom / total if total else 0.0
-            spark = df.sparkSession
-            prob_df = spark.createDataFrame(sig_pdf[[idx, "__prob"]])
-            out = signal.join(F.broadcast(prob_df), idx)
-        else:  # large-scale approximate path (equivalence-tested vs
-            # the exact branch in tests/test_noiseq_golden.py)
-            out = self._prob_binomial_approx(signal, pair, idx, ca, cb, lib, scale)
-
+        # noise cloud: the multinomial couples all genes of a sample, so
+        # the simulation runs on the driver over the whole count vector.
+        # Driver bytes per gene: the two counts and the two signal
+        # columns (4 float64, the index twice) plus 2·C(nss, 2) noise
+        # points of (|M|, |D|), held raw and sorted by |M|: about 0.7 KB
+        # per gene at nss=5, 0.7 GB at 10^6 genes. Gene order feeds the
+        # multinomial draws: sort by the index, not the partition order
+        # of the collected rows.
+        pair_pdf = pair.select(idx, ca, cb).toPandas().sort_values(idx, kind="stable")
+        nm, nd = self._simulate_noise(pair_pdf[[ca, cb]].to_numpy(dtype=float), lib, scale)
+        am_order = np.argsort(nm)
+        sig_pdf = signal.select(idx, "__m", "__d").toPandas()
+        am = np.abs(sig_pdf["__m"].to_numpy(dtype=float))
+        ad = np.abs(sig_pdf["__d"].to_numpy(dtype=float))
+        dom = _dominance_counts(nm[am_order], nd[am_order], am, ad)
+        sig_pdf["__prob"] = dom / len(nm) if len(nm) else 0.0
+        prob_df = df.sparkSession.createDataFrame(sig_pdf[[idx, "__prob"]])
+        out = signal.join(F.broadcast(prob_df), idx)
         return self._finalize(out, idx, ca, cb)
 
     def _finalize(self, out, idx, ca, cb):
@@ -251,122 +235,3 @@ class NOISeq(Transformer):
         if not out_m:
             return np.array([]), np.array([])
         return np.concatenate(out_m), np.concatenate(out_d)
-
-    def _prob_binomial_approx(
-        self, signal, pair, idx, ca, cb, lib, scale, bins: int = 512
-    ):
-        """Distributed approximation for very large gene counts.
-
-        The exact multinomial couples all genes only through the shared
-        replicate total; its marginals are Binomial(size_r, p_g), and
-        for large totals the coupling is O(p_g) — negligible. So:
-
-        1. Per-gene binomial replicate draws in mapInPandas (replicate
-           sizes drawn once on the driver from the seeded stream, so
-           every gene sees the same replicate sizing as the exact
-           scheme). Per-gene deterministic sub-seeds keep the result
-           independent of partitioning. Noise points (|M|, |D|) stay
-           distributed — never collected.
-        2. A 2-D histogram of the noise cloud (linear bins in |M|,
-           log1p bins in |D| for the heavy tail) is aggregated to at
-           most ``bins``² cells; only the CELLS are collected (bounded
-           by resolution, not corpus size) and turned into an inclusive
-           2-D prefix-sum.
-        3. Per-gene prob = prefix[bin(|M|), bin(|D|)] / total via an
-           Arrow-batched pandas UDF over the broadcast prefix matrix.
-
-        Error is bounded by one histogram cell: points sharing the
-        gene's cell but strictly above it are over-counted — at most
-        the cell's mass, so prob is exact to ~1/bins of the local
-        marginal density. (A counter-based RNG would remove the
-        per-gene generator init, the only non-vectorized step, if this
-        path ever becomes CPU-bound at extreme gene counts.)
-        """
-        from pyspark.sql import functions as SF
-
-        nss, pnr, v, k = self.nss, self.pnr, self.v, float(self.k)
-        base_seed = self.seed
-        rng = np.random.RandomState(base_seed)
-        # replicate sizes per (condition, replicate): the same
-        # driver-side scalars the exact path derives per multinomial
-        sizes = [
-            [
-                int(round(pnr * lib[ci] * rng.uniform(1 - v, 1 + v)))
-                for _ in range(nss)
-            ]
-            for ci in range(2)
-        ]
-        lib0, lib1 = float(lib[0]), float(lib[1])
-        pair_idx = [(r1, r2) for r1 in range(nss) for r2 in range(r1 + 1, nss)]
-
-        noise_schema = T.StructType(
-            [
-                T.StructField("__nm", T.DoubleType()),
-                T.StructField("__nd", T.DoubleType()),
-            ]
-        )
-
-        def gen_noise(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                xa = pdf[ca].to_numpy(dtype=float)
-                xb = pdf[cb].to_numpy(dtype=float)
-                ids = pdf[idx].astype(str).to_numpy()
-                out_m, out_d = [], []
-                for g in range(len(pdf)):
-                    # partition-independent per-gene stream
-                    gh = int.from_bytes(
-                        hashlib.md5(ids[g].encode()).digest()[:8], "big"
-                    )
-                    grng = np.random.default_rng([base_seed, gh])
-                    for ci, x, libc in ((0, xa[g], lib0), (1, xb[g], lib1)):
-                        if libc <= 0:
-                            continue
-                        p = min(x / libc, 1.0)
-                        reps = grng.binomial(sizes[ci], p).astype(float)
-                        reps[reps == 0] = k
-                        for r1, r2 in pair_idx:
-                            out_m.append(abs(np.log2(reps[r1] / reps[r2])))
-                            out_d.append(abs(reps[r1] - reps[r2]))
-                yield pd.DataFrame({"__nm": out_m, "__nd": out_d})
-
-        noise = persist_tracked(pair.mapInPandas(gen_noise, noise_schema))
-        ext = noise.agg(
-            SF.max("__nm").alias("m_max"), SF.max("__nd").alias("d_max")
-        ).collect()[0]
-        m_max = float(ext["m_max"] or 1.0) or 1.0
-        d_log_max = float(np.log1p(ext["d_max"] or 1.0)) or 1.0
-
-        m_bin = SF.least(
-            SF.floor(SF.col("__nm") / m_max * bins).cast("int"), SF.lit(bins - 1)
-        )
-        d_bin = SF.least(
-            SF.floor(SF.log1p(SF.col("__nd")) / d_log_max * bins).cast("int"),
-            SF.lit(bins - 1),
-        )
-        cells = (
-            noise.groupBy(m_bin.alias("mb"), d_bin.alias("db"))
-            .agg(SF.count(SF.lit(1)).alias("n"))
-            .collect()
-        )
-        noise.unpersist()
-        hist = np.zeros((bins, bins), dtype=np.int64)
-        for r in cells:
-            hist[r["mb"], r["db"]] = r["n"]
-        prefix = hist.cumsum(axis=0).cumsum(axis=1)
-        total = int(prefix[-1, -1])
-
-        def prob_lookup(m: pd.Series, d: pd.Series) -> pd.Series:
-            if total == 0:
-                return pd.Series(np.zeros(len(m)))
-            am = np.abs(m.to_numpy(dtype=float))
-            ad = np.abs(d.to_numpy(dtype=float))
-            mi = np.minimum((am / m_max * bins).astype(int), bins - 1)
-            di = np.minimum(
-                (np.log1p(ad) / d_log_max * bins).astype(int), bins - 1
-            )
-            return pd.Series(prefix[mi, di] / total)
-
-        prob_udf = F.pandas_udf(prob_lookup, T.DoubleType())
-        return signal.withColumn("__prob", prob_udf(F.col("__m"), F.col("__d")))

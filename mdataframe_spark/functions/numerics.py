@@ -60,12 +60,16 @@ def _gamma_p_series(a, x, max_iter=500, eps=1e-15):
     ap = a.copy()
     summ = 1.0 / a
     delta = summ.copy()
+    # each element stops at its own convergence, so a value does not
+    # depend on which other elements share the batch
+    live = np.arange(len(a))
     for _ in range(max_iter):
-        ap = ap + 1
-        delta = delta * x / ap
-        summ = summ + delta
-        if np.all(np.abs(delta) < np.abs(summ) * eps):
+        if len(live) == 0:
             break
+        ap[live] += 1
+        delta[live] = delta[live] * x[live] / ap[live]
+        summ[live] += delta[live]
+        live = live[np.abs(delta[live]) >= np.abs(summ[live]) * eps]
     return summ * np.exp(-x + a * np.log(np.where(x > 0, x, 1.0)) - gammaln(a))
 
 
@@ -76,18 +80,21 @@ def _gamma_q_cf(a, x, max_iter=500, eps=1e-15):
     c = np.full_like(x, 1.0 / tiny)
     d = 1.0 / np.maximum(b, tiny)
     h = d.copy()
+    live = np.arange(len(x))  # per-element stop, as in _gamma_p_series
     for i in range(1, max_iter + 1):
-        an = -i * (i - a)
-        b = b + 2.0
-        d = an * d + b
-        d = np.where(np.abs(d) < tiny, tiny, d)
-        c = b + an / c
-        c = np.where(np.abs(c) < tiny, tiny, c)
-        d = 1.0 / d
-        delta = d * c
-        h = h * delta
-        if np.all(np.abs(delta - 1.0) < eps):
+        if len(live) == 0:
             break
+        an = -i * (i - a[live])
+        b[live] += 2.0
+        dl = an * d[live] + b[live]
+        dl = np.where(np.abs(dl) < tiny, tiny, dl)
+        cl = b[live] + an / c[live]
+        cl = np.where(np.abs(cl) < tiny, tiny, cl)
+        dl = 1.0 / dl
+        delta = dl * cl
+        d[live], c[live] = dl, cl
+        h[live] *= delta
+        live = live[np.abs(delta - 1.0) >= eps]
     return h * np.exp(-x + a * np.log(np.where(x > 0, x, 1.0)) - gammaln(a))
 
 
@@ -136,17 +143,20 @@ def qgamma(p, shape, scale=1.0, lower_tail=True, tol=1e-12, max_iter=100):
     x = np.where(x <= 1e-8, series_x, x)
     x = np.maximum(x, 1e-300)
     log_x = np.log(x)
+    live = np.arange(len(p))  # per-element stop, as in _gamma_p_series
     for _ in range(max_iter):
-        x = np.exp(log_x)
-        f = gammainc_p(shape, x) - p
-        # pdf of standard gamma at x
-        log_pdf = (shape - 1.0) * log_x - x - gammaln(shape)
-        # Newton step in log space: d/dlogx P = x * pdf
-        step = f / np.exp(log_pdf + log_x)
-        step = np.clip(step, -3.0, 3.0)
-        log_x = log_x - step
-        if np.all(np.abs(step) < tol):
+        if len(live) == 0:
             break
+        lx, sh = log_x[live], shape[live]
+        x = np.exp(lx)
+        f = gammainc_p(sh, x) - p[live]
+        # pdf of standard gamma at x
+        log_pdf = (sh - 1.0) * lx - x - gammaln(sh)
+        # Newton step in log space: d/dlogx P = x * pdf
+        step = f / np.exp(log_pdf + lx)
+        step = np.clip(step, -3.0, 3.0)
+        log_x[live] = lx - step
+        live = live[np.abs(step) >= tol]
     return np.exp(log_x) * scale
 
 
@@ -221,25 +231,29 @@ def _betacf(a, b, x, max_iter=300, eps=1e-15):
     d = np.where(np.abs(d) < tiny, tiny, d)
     d = 1.0 / d
     h = d.copy()
+    live = np.arange(len(x))  # per-element stop, as in _gamma_p_series
     for m in range(1, max_iter + 1):
-        m2 = 2 * m
-        aa = m * (b - m) * x / ((qam + m2) * (a + m2))
-        d = 1.0 + aa * d
-        d = np.where(np.abs(d) < tiny, tiny, d)
-        c = 1.0 + aa / c
-        c = np.where(np.abs(c) < tiny, tiny, c)
-        d = 1.0 / d
-        h = h * d * c
-        aa = -(a + m) * (qab + m) * x / ((a + m2) * (qap + m2))
-        d = 1.0 + aa * d
-        d = np.where(np.abs(d) < tiny, tiny, d)
-        c = 1.0 + aa / c
-        c = np.where(np.abs(c) < tiny, tiny, c)
-        d = 1.0 / d
-        delta = d * c
-        h = h * delta
-        if np.all(np.abs(delta - 1.0) < eps):
+        if len(live) == 0:
             break
+        m2 = 2 * m
+        al, bl, xl = a[live], b[live], x[live]
+        dl, cl, hl = d[live], c[live], h[live]
+        aa = m * (bl - m) * xl / ((qam[live] + m2) * (al + m2))
+        dl = 1.0 + aa * dl
+        dl = np.where(np.abs(dl) < tiny, tiny, dl)
+        cl = 1.0 + aa / cl
+        cl = np.where(np.abs(cl) < tiny, tiny, cl)
+        dl = 1.0 / dl
+        hl = hl * dl * cl
+        aa = -(al + m) * (qab[live] + m) * xl / ((al + m2) * (qap[live] + m2))
+        dl = 1.0 + aa * dl
+        dl = np.where(np.abs(dl) < tiny, tiny, dl)
+        cl = 1.0 + aa / cl
+        cl = np.where(np.abs(cl) < tiny, tiny, cl)
+        dl = 1.0 / dl
+        delta = dl * cl
+        d[live], c[live], h[live] = dl, cl, hl * delta
+        live = live[np.abs(delta - 1.0) >= eps]
     return h
 
 
@@ -296,13 +310,15 @@ def qbeta(p, a, b, tol=1e-12, max_iter=200):
     p, a, b = np.broadcast_arrays(p, a, b)
     lo = np.zeros(p.shape, dtype=float)
     hi = np.ones(p.shape, dtype=float)
+    live = np.arange(len(p))  # per-element stop, as in _gamma_p_series
     for _ in range(max_iter):
-        mid = 0.5 * (lo + hi)
-        below = betainc(a, b, mid) < p
-        lo = np.where(below, mid, lo)
-        hi = np.where(below, hi, mid)
-        if np.all(hi - lo < tol):
+        if len(live) == 0:
             break
+        mid = 0.5 * (lo[live] + hi[live])
+        below = betainc(a[live], b[live], mid) < p[live]
+        lo[live] = np.where(below, mid, lo[live])
+        hi[live] = np.where(below, hi[live], mid)
+        live = live[hi[live] - lo[live] >= tol]
     return 0.5 * (lo + hi)
 
 

@@ -184,38 +184,3 @@ def test_fit_f_dist_recovers_df2():
     cov = rng.normal(size=n)
     est_cov = ek.fit_f_dist(s2, df1, covariate=cov)
     assert abs(est_cov - est) / est < 0.25, (est, est_cov)
-
-
-def test_eb_branches_agree(spark, monkeypatch):
-    """The fused driver-side EB reduction (n <= EB_COLLECT_CAP) and the
-    distributed branch must produce IDENTICAL p-values on the same
-    input: both now compute trend-bin cuts with the exact numpy
-    'lower'-quantile convention, so crossing the cap cannot change
-    results discontinuously."""
-    import numpy as np
-
-    from mdataframe_spark.functions import differential
-    from mdataframe_spark.functions.differential import EdgeR_Unpaired
-
-    # deterministic 40-gene, 6-sample fixture
-    rows = []
-    for gi in range(40):
-        base = 20 + (gi * 13) % 150
-        eff = 3 if gi % 5 == 0 else 1
-        vals = [
-            base + (gi * 7 + s * 11) % 9 if s < 3 else base * eff + (gi + s) % 7
-            for s in range(6)
-        ]
-        rows.append((f"g{gi}", *map(int, vals)))
-    df = spark.createDataFrame(
-        rows, ["__row_id", "a1", "a2", "a3", "b1", "b2", "b3"]
-    )
-    c2c = {"A": ["a1", "a2", "a3"], "B": ["b1", "b2", "b3"]}
-
-    t1 = EdgeR_Unpaired("A", "B", c2c)
-    fused = {r["__row_id"]: r[t1.p_column] for r in t1(df).collect()}
-    monkeypatch.setattr(differential, "EB_COLLECT_CAP", -1)  # force distributed
-    t2 = EdgeR_Unpaired("A", "B", c2c)
-    dist = {r["__row_id"]: r[t2.p_column] for r in t2(df).collect()}
-    for g in fused:
-        assert abs(fused[g] - dist[g]) < 1e-12, (g, fused[g], dist[g])
